@@ -89,6 +89,110 @@ def test_process_pipeline(spark, geojson_dir, tmp_path):
     assert lon2 > lon
 
 
+def test_process_keeps_every_feature(spark, tmp_path):
+    """Hostile FeatureCollection: rows out == rows in. Null and empty
+    geometries stay as rows, byte-identical features stay two rows of
+    3 vertices each, a Z ordinate is dropped and a null vertex becomes
+    [null, null] with a null length."""
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    null_geom = dict(_feature("nullgeom", COORDS), geometry=None)
+    z3d = [[325940.0, 673060.0, 12.5]] + COORDS[1:]
+    null_vertex = [COORDS[0], None, COORDS[2]]
+    feats = [
+        null_geom,
+        _feature("empty", []),
+        _feature("dup", COORDS),
+        _feature("dup", COORDS),
+        _feature("z3d", z3d),
+        _feature("nullvert", null_vertex),
+    ]
+    src = tmp_path / "hostile.geojson"
+    src.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+
+    rows = run(spark, str(src), str(tmp_path / "out"), "parquet").collect()
+    assert len(rows) == len(feats)
+    by_id: dict = {}
+    for r in rows:
+        by_id.setdefault(r["route_id"], []).append(r)
+
+    assert len(by_id["dup"]) == 2
+    for r in by_id["dup"]:
+        assert len(r["coordinates"]) == 3
+        assert r["route_length_m"] == pytest.approx(2000.0)
+    assert by_id["nullgeom"][0]["coordinates"] is None
+    assert by_id["empty"][0]["coordinates"] == []
+    assert by_id["empty"][0]["route_length_m"] == 0.0
+
+    dup_coords = by_id["dup"][0]["coordinates"]
+    (z,) = by_id["z3d"]
+    assert [len(v) for v in z["coordinates"]] == [2, 2, 2]
+    assert z["coordinates"] == dup_coords
+    assert z["route_length_m"] == pytest.approx(2000.0)
+
+    (nv,) = by_id["nullvert"]
+    assert nv["coordinates"] == [dup_coords[0], [None, None], dup_coords[2]]
+    assert nv["route_length_m"] is None
+
+
+def test_process_survives_short_vertices(spark, tmp_path):
+    """A vertex with fewer than two ordinates must not fail the job
+    (INVALID_ARRAY_INDEX under ANSI mode): its route gets a null length
+    and the vertex comes out [null, null]; an empty vertex next to a
+    valid one never picks up the neighbour's values."""
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    feats = [
+        _feature("short", [[325940.0], [326940.0, 673060.0]]),
+        _feature("empty_vertex", [[], [326940.0, 673060.0]]),
+        _feature("null_ordinate", [[None, 673060.0], [326940.0, 673060.0]]),
+        _feature("ok", COORDS),
+    ]
+    src = tmp_path / "short.geojson"
+    src.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+
+    rows = {
+        r["route_id"]: r
+        for r in run(spark, str(src), str(tmp_path / "out"), "parquet").collect()
+    }
+    assert set(rows) == {"short", "empty_vertex", "null_ordinate", "ok"}
+    second = rows["ok"]["coordinates"][1]  # the shared (326940, 673060) vertex
+    for rid in ("short", "empty_vertex", "null_ordinate"):
+        assert rows[rid]["route_length_m"] is None, rid
+        assert rows[rid]["coordinates"] == [[None, None], second], rid
+    assert rows["ok"]["route_length_m"] == pytest.approx(2000.0)
+
+
+def test_route_reprojection_matches_point_udf(spark):
+    """The whole-route function and the point UDF run the same numpy
+    series: identical doubles on the OS control point and the
+    Edinburgh vertices."""
+    from pyspark.sql import functions as F
+
+    from transit_scrape_spark.functions.geo import (
+        reproject_bng_to_wgs84_udf,
+        reproject_routes_bng_to_wgs84,
+    )
+
+    pts = [[651409.903, 313177.270]] + COORDS
+    route = spark.createDataFrame([(pts,)], "coordinates array<array<double>>")
+    got = route.select(
+        reproject_routes_bng_to_wgs84(F.col("coordinates")).alias("c")
+    ).collect()[0]["c"]
+
+    rep = reproject_bng_to_wgs84_udf()
+    points = spark.createDataFrame(
+        [(i, e, n) for i, (e, n) in enumerate(pts)], "i int, e double, n double"
+    )
+    want = [
+        [r["ll"]["lon"], r["ll"]["lat"]]
+        for r in points.select("i", rep(F.col("e"), F.col("n")).alias("ll"))
+        .orderBy("i")
+        .collect()
+    ]
+    assert got == want
+
+
 def test_load_idempotent(spark, geojson_dir, tmp_path):
     from transit_scrape_spark.pipelines.load_routes import load
 

@@ -63,6 +63,24 @@ def test_reproject_is_arrow_vectorized(spark, sf_dir):
     assert "BatchEvalPython" not in p
 
 
+def test_process_routes_is_shuffle_free(spark, tmp_path):
+    """process_route_features maps each feature to one row: no Exchange
+    (no regroup of vertices into routes) and no Generate (no per-vertex
+    explode); the whole-route Arrow UDF does the reprojection."""
+    from transit_scrape_spark.pipelines.process_routes import process_route_features
+
+    src = str(tmp_path / "feats")
+    spark.createDataFrame(
+        [("R1", "LineString", [[325940.0, 673060.0], [326940.0, 673060.0]], "a.geojson")],
+        "route_id string, geometry_type string, "
+        "coordinates array<array<double>>, source_file string",
+    ).write.parquet(src)
+    p = executed_plan(process_route_features(spark.read.parquet(src)))
+    assert "Exchange" not in p
+    assert "Generate" not in p
+    assert "ArrowEvalPython" in p
+
+
 def test_lsh_candidates_never_cross_join(spark, sf_dir):
     p = _plan(spark, sf_dir, "dedup-near-minhash")
     assert "CartesianProduct" not in p

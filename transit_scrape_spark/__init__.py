@@ -12,7 +12,7 @@ Layout
 - ``sources``      parquet fixture loader, GeoJSON reader, sinks.
 - ``functions``    scalar/column expression library (grid refs, geometry,
                    text, vectors) — built-in Column expressions first,
-                   pandas_udf only where unavoidable (reprojection).
+                   Arrow UDFs only where unavoidable (reprojection).
 - ``operators``    composite DataFrame operators (dedup, simsearch, ...).
 - ``queries``      the operator registry: op_id -> (Spark plan, oracle SQL).
 - ``pipelines``    end-to-end batch pipelines mirroring the reference CLIs.

@@ -10,13 +10,17 @@ matching the reference's own interchange format (WKT at every boundary:
 
 Everything here is built-in higher-order Column functions
 (transform / zip_with / aggregate / slice) — codegen'd, no UDF — except
-``reproject_bng_to_wgs84`` which is a vectorized pandas_udf (numpy
-implementation of the OSGB36 inverse transverse-Mercator + Helmert
-transform, public formulas from the OS coordinate-systems guide).
+reprojection: the point pandas_udfs (``reproject_bng_to_wgs84_udf``,
+``reproject_etrs89_grid_to_wgs84_udf``) and the whole-route Arrow UDF
+(``reproject_routes_bng_to_wgs84``). All three run one numpy
+inverse transverse-Mercator series (``_inverse_tm``; public formulas
+from the OS coordinate-systems guide), the BNG ones followed by the
+OSGB36 -> WGS84 Helmert step.
 """
 
 # NOTE: no `from __future__ import annotations` here — stringified type
-# hints break pandas_udf signature inspection for the reprojection UDF.
+# hints break pandas_udf/arrow_udf signature inspection.
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -29,12 +33,17 @@ def linestring_length(coords: Column) -> Column:
     Reference: per-row ``geometry.length`` (process_cycle_networks.py:88).
     Sum of per-segment Euclidean lengths via zip_with over the array and
     its tail — pure codegen, no explode (no row-count blowup at scale).
+    An empty route has length 0; a null vertex or one with fewer than
+    two ordinates makes the length null (``F.get``, not ``[]``, so ANSI
+    mode does not fail the job on it).
     """
+    n_segs = F.greatest(F.size(coords) - 1, F.lit(0))
     segs = F.zip_with(
-        F.slice(coords, 1, F.size(coords) - 1),
-        F.slice(coords, 2, F.size(coords) - 1),
+        F.slice(coords, 1, n_segs),
+        F.slice(coords, 2, n_segs),
         lambda a, b: F.sqrt(
-            F.pow(b[0] - a[0], F.lit(2)) + F.pow(b[1] - a[1], F.lit(2))
+            F.pow(F.get(b, 0) - F.get(a, 0), F.lit(2))
+            + F.pow(F.get(b, 1) - F.get(a, 1), F.lit(2))
         ),
     )
     return F.aggregate(segs, F.lit(0.0), lambda acc, x: acc + x)
@@ -327,7 +336,109 @@ def load_shift_grid(spark) -> tuple["DataFrame", float]:  # noqa: F821
     return build_shift_grid_cells(spark), GRID_CELL_M
 
 
-# --- reprojection (the one pandas_udf) ------------------------------------
+# --- reprojection (Arrow-batched numpy) -----------------------------------
+
+# ellipsoid semi-axes (a, b) in metres: OSGB36 is on Airy 1830, ETRS89 on
+# GRS80 (public OS 'A guide to coordinate systems in Great Britain')
+_AIRY_1830 = (6377563.396, 6356256.909)
+_GRS80 = (6378137.0, 6356752.314140356)
+
+_LONLAT_T = "struct<lon: double, lat: double>"
+
+
+def _inverse_tm(E, N, a, b):
+    """National Grid easting/northing -> geodetic (lat, lon) radians on
+    the ellipsoid (a, b): 8 meridional-arc iterations, then the
+    projection series. ``functions/geo_oracle.py`` replays it in SQL
+    step for step, so the iteration count stays fixed."""
+    F0 = 0.9996012717
+    lat0 = np.radians(49.0)
+    lon0 = np.radians(-2.0)
+    N0, E0 = -100000.0, 400000.0
+    e2 = 1 - (b * b) / (a * a)
+    n_ = (a - b) / (a + b)
+
+    lat = (N - N0) / (a * F0) + lat0
+    for _ in range(8):
+        dlat = lat - lat0
+        slat = lat + lat0
+        M = (
+            b
+            * F0
+            * (
+                (1 + n_ + 1.25 * n_**2 + 1.25 * n_**3) * dlat
+                - (3 * n_ + 3 * n_**2 + 2.625 * n_**3)
+                * np.sin(dlat)
+                * np.cos(slat)
+                + (1.875 * n_**2 + 1.875 * n_**3)
+                * np.sin(2 * dlat)
+                * np.cos(2 * slat)
+                - (35 / 24) * n_**3 * np.sin(3 * dlat) * np.cos(3 * slat)
+            )
+        )
+        lat = lat + (N - N0 - M) / (a * F0)
+
+    sin_lat, cos_lat, tan_lat = np.sin(lat), np.cos(lat), np.tan(lat)
+    nu = a * F0 / np.sqrt(1 - e2 * sin_lat**2)
+    rho = a * F0 * (1 - e2) / (1 - e2 * sin_lat**2) ** 1.5
+    eta2 = nu / rho - 1
+
+    VII = tan_lat / (2 * rho * nu)
+    VIII = (
+        tan_lat
+        / (24 * rho * nu**3)
+        * (5 + 3 * tan_lat**2 + eta2 - 9 * tan_lat**2 * eta2)
+    )
+    IX = tan_lat / (720 * rho * nu**5) * (61 + 90 * tan_lat**2 + 45 * tan_lat**4)
+    X = 1.0 / (cos_lat * nu)
+    XI = (nu / rho + 2 * tan_lat**2) / (6 * cos_lat * nu**3)
+    XII = (5 + 28 * tan_lat**2 + 24 * tan_lat**4) / (120 * cos_lat * nu**5)
+    XIIA = (61 + 662 * tan_lat**2 + 1320 * tan_lat**4 + 720 * tan_lat**6) / (
+        5040 * cos_lat * nu**7
+    )
+    dE = E - E0
+    return (
+        lat - VII * dE**2 + VIII * dE**4 - IX * dE**6,
+        lon0 + X * dE - XI * dE**3 + XII * dE**5 - XIIA * dE**7,
+    )
+
+
+def _helmert_osgb36_to_wgs84(lat, lon):
+    """OSGB36 geodetic (lat, lon) radians at h=0 -> WGS84 (lat, lon)
+    radians: to cartesian on Airy, 7-parameter Helmert (~5 m datum
+    accuracy), then 6 geodetic iterations on WGS84."""
+    a, b = _AIRY_1830
+    e2 = 1 - (b * b) / (a * a)
+    sin_p, cos_p = np.sin(lat), np.cos(lat)
+    nu = a / np.sqrt(1 - e2 * sin_p**2)
+    x = nu * cos_p * np.cos(lon)
+    y = nu * cos_p * np.sin(lon)
+    z = (1 - e2) * nu * sin_p
+
+    tx, ty, tz = 446.448, -125.157, 542.060
+    rx = np.radians(0.1502 / 3600)
+    ry = np.radians(0.2470 / 3600)
+    rz = np.radians(0.8421 / 3600)
+    s = -20.4894e-6
+    x2 = tx + (1 + s) * x - rz * y + ry * z
+    y2 = ty + rz * x + (1 + s) * y - rx * z
+    z2 = tz - ry * x + rx * y + (1 + s) * z
+
+    a84, b84 = 6378137.0, 6356752.3142
+    e2_84 = 1 - (b84 * b84) / (a84 * a84)
+    p = np.sqrt(x2**2 + y2**2)
+    lat_w = np.arctan2(z2, p * (1 - e2_84))
+    for _ in range(6):
+        nu_w = a84 / np.sqrt(1 - e2_84 * np.sin(lat_w) ** 2)
+        lat_w = np.arctan2(z2 + e2_84 * nu_w * np.sin(lat_w), p)
+    return lat_w, np.arctan2(y2, x2)
+
+
+def _bng_to_wgs84(E, N):
+    """BNG easting/northing arrays -> WGS84 (lon, lat) degree arrays."""
+    lat, lon = _helmert_osgb36_to_wgs84(*_inverse_tm(E, N, *_AIRY_1830))
+    return np.degrees(lon), np.degrees(lat)
+
 
 def reproject_bng_to_wgs84_udf():
     """Vectorized EPSG:27700 (British National Grid / OSGB36) -> EPSG:4326.
@@ -342,104 +453,56 @@ def reproject_bng_to_wgs84_udf():
     struct<lon: double, lat: double>; operates on Arrow batches with
     numpy — no per-row Python.
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    out_t = StructType(
-        [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-    )
-
-    @F.pandas_udf(out_t)
+    @F.pandas_udf(_LONLAT_T)
     def _reproject(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-        E = e.to_numpy(dtype=np.float64)
-        N = n.to_numpy(dtype=np.float64)
-
-        # Airy 1830 ellipsoid + National Grid projection constants (public)
-        a, b = 6377563.396, 6356256.909
-        F0 = 0.9996012717
-        lat0 = np.radians(49.0)
-        lon0 = np.radians(-2.0)
-        N0, E0 = -100000.0, 400000.0
-        e2 = 1 - (b * b) / (a * a)
-        n_ = (a - b) / (a + b)
-
-        # iterative meridional-arc inversion
-        lat = (N - N0) / (a * F0) + lat0
-        M = np.zeros_like(lat)
-        for _ in range(8):
-            dlat = lat - lat0
-            slat = lat + lat0
-            M = (
-                b
-                * F0
-                * (
-                    (1 + n_ + 1.25 * n_**2 + 1.25 * n_**3) * dlat
-                    - (3 * n_ + 3 * n_**2 + 2.625 * n_**3)
-                    * np.sin(dlat)
-                    * np.cos(slat)
-                    + (1.875 * n_**2 + 1.875 * n_**3)
-                    * np.sin(2 * dlat)
-                    * np.cos(2 * slat)
-                    - (35 / 24) * n_**3 * np.sin(3 * dlat) * np.cos(3 * slat)
-                )
-            )
-            lat = lat + (N - N0 - M) / (a * F0)
-
-        sin_lat, cos_lat, tan_lat = np.sin(lat), np.cos(lat), np.tan(lat)
-        nu = a * F0 / np.sqrt(1 - e2 * sin_lat**2)
-        rho = a * F0 * (1 - e2) / (1 - e2 * sin_lat**2) ** 1.5
-        eta2 = nu / rho - 1
-
-        VII = tan_lat / (2 * rho * nu)
-        VIII = (
-            tan_lat
-            / (24 * rho * nu**3)
-            * (5 + 3 * tan_lat**2 + eta2 - 9 * tan_lat**2 * eta2)
+        lon, lat = _bng_to_wgs84(
+            e.to_numpy(dtype=np.float64), n.to_numpy(dtype=np.float64)
         )
-        IX = tan_lat / (720 * rho * nu**5) * (61 + 90 * tan_lat**2 + 45 * tan_lat**4)
-        X = 1.0 / (cos_lat * nu)
-        XI = (nu / rho + 2 * tan_lat**2) / (6 * cos_lat * nu**3)
-        XII = (5 + 28 * tan_lat**2 + 24 * tan_lat**4) / (120 * cos_lat * nu**5)
-        XIIA = (61 + 662 * tan_lat**2 + 1320 * tan_lat**4 + 720 * tan_lat**6) / (
-            5040 * cos_lat * nu**7
-        )
-        dE = E - E0
-        lat_osgb = lat - VII * dE**2 + VIII * dE**4 - IX * dE**6
-        lon_osgb = lon0 + X * dE - XI * dE**3 + XII * dE**5 - XIIA * dE**7
-
-        # OSGB36 geodetic -> cartesian (h=0), Helmert -> WGS84, -> geodetic
-        sin_p, cos_p = np.sin(lat_osgb), np.cos(lat_osgb)
-        nu2 = a / np.sqrt(1 - e2 * sin_p**2)
-        x = nu2 * cos_p * np.cos(lon_osgb)
-        y = nu2 * cos_p * np.sin(lon_osgb)
-        z = (1 - e2) * nu2 * sin_p
-
-        # OSGB36 -> WGS84 Helmert parameters (public, OS guide, ~5 m datum acc.)
-        tx, ty, tz = 446.448, -125.157, 542.060
-        rx = np.radians(0.1502 / 3600)
-        ry = np.radians(0.2470 / 3600)
-        rz = np.radians(0.8421 / 3600)
-        s = -20.4894e-6
-        x2 = tx + (1 + s) * x - rz * y + ry * z
-        y2 = ty + rz * x + (1 + s) * y - rx * z
-        z2 = tz - ry * x + rx * y + (1 + s) * z
-
-        # WGS84 ellipsoid
-        a84, b84 = 6378137.0, 6356752.3142
-        e2_84 = 1 - (b84 * b84) / (a84 * a84)
-        p = np.sqrt(x2**2 + y2**2)
-        lat_w = np.arctan2(z2, p * (1 - e2_84))
-        for _ in range(6):
-            nu_w = a84 / np.sqrt(1 - e2_84 * np.sin(lat_w) ** 2)
-            lat_w = np.arctan2(z2 + e2_84 * nu_w * np.sin(lat_w), p)
-        lon_w = np.arctan2(y2, x2)
-
-        return pd.DataFrame(
-            {"lon": np.degrees(lon_w), "lat": np.degrees(lat_w)}
-        )
+        return pd.DataFrame({"lon": lon, "lat": lat})
 
     return _reproject
+
+
+def reproject_routes_bng_to_wgs84(coords: Column) -> Column:
+    """Whole-route BNG -> WGS84: coords array<array<double>> of
+    [easting, northing(, z)] vertices -> [[lon, lat], ...].
+
+    Reference: whole-column ``to_crs`` (process_cycle_networks.py:112).
+    An Arrow UDF over the list column: each batch's vertices are
+    flattened through the list offsets, reprojected in one numpy call
+    (the same series as :func:`reproject_bng_to_wgs84_udf`, so results
+    match it bit for bit), and rebuilt with the batch's own route
+    offsets and null mask — one row in, one row out, no shuffle.
+
+    Each vertex is read through its own offsets, so a Z ordinate is
+    dropped. A null vertex or one with fewer than two ordinates becomes
+    ``[null, null]`` without reading its neighbour's values; a null or
+    empty route stays null or empty.
+    """
+    import pyarrow as pa
+
+    @F.arrow_udf("array<array<double>>")
+    def _reproject(routes: pa.Array) -> pa.Array:
+        verts = routes.values
+        offs = verts.offsets.to_numpy()
+        starts = offs[:-1]
+        ok = (np.diff(offs) >= 2) & verts.is_valid().to_numpy(zero_copy_only=False)
+        vals = verts.values.to_numpy(zero_copy_only=False)  # null -> NaN
+        e = np.full(len(verts), np.nan)
+        n = np.full(len(verts), np.nan)
+        e[ok] = vals[starts[ok]]
+        n[ok] = vals[starts[ok] + 1]
+        lonlat = np.empty(2 * len(verts))
+        lonlat[0::2], lonlat[1::2] = _bng_to_wgs84(e, n)
+        pairs = pa.ListArray.from_arrays(
+            np.arange(0, lonlat.size + 1, 2, dtype=np.int32),
+            pa.array(lonlat, from_pandas=True),  # NaN -> null
+        )
+        return pa.ListArray.from_arrays(routes.offsets, pairs, mask=routes.is_null())
+
+    return _reproject(coords)
 
 
 def ostn15_inverse_shift(
@@ -486,76 +549,16 @@ def reproject_etrs89_grid_to_wgs84_udf():
     WGS84-equivalent at mm level). Chaining the Airy+Helmert UDF after
     a real-grid correction would apply the OSGB36->ETRS89 datum jump
     TWICE (~100 m error) — that UDF is the ~1 m no-grid path; this one
-    is the cm-accurate with-grid path. Same inverse-TM series (OS
-    'A guide to coordinate systems in Great Britain'), GRS80 constants.
+    is the cm-accurate with-grid path. Same inverse-TM series
+    (``_inverse_tm``), GRS80 constants.
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    out_t = StructType(
-        [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-    )
-
-    @F.pandas_udf(out_t)
+    @F.pandas_udf(_LONLAT_T)
     def _reproject(e: pd.Series, n: pd.Series) -> pd.DataFrame:
-        E = e.to_numpy(dtype=np.float64)
-        N = n.to_numpy(dtype=np.float64)
-
-        # GRS80 ellipsoid + the same National Grid projection constants
-        a, b = 6378137.0, 6356752.314140356
-        F0 = 0.9996012717
-        lat0 = np.radians(49.0)
-        lon0 = np.radians(-2.0)
-        N0, E0 = -100000.0, 400000.0
-        e2 = 1 - (b * b) / (a * a)
-        n_ = (a - b) / (a + b)
-
-        lat = (N - N0) / (a * F0) + lat0
-        M = np.zeros_like(lat)
-        for _ in range(8):
-            dlat = lat - lat0
-            slat = lat + lat0
-            M = (
-                b
-                * F0
-                * (
-                    (1 + n_ + 1.25 * n_**2 + 1.25 * n_**3) * dlat
-                    - (3 * n_ + 3 * n_**2 + 2.625 * n_**3)
-                    * np.sin(dlat)
-                    * np.cos(slat)
-                    + (1.875 * n_**2 + 1.875 * n_**3)
-                    * np.sin(2 * dlat)
-                    * np.cos(2 * slat)
-                    - (35 / 24) * n_**3 * np.sin(3 * dlat) * np.cos(3 * slat)
-                )
-            )
-            lat = lat + (N - N0 - M) / (a * F0)
-
-        sin_lat, cos_lat, tan_lat = np.sin(lat), np.cos(lat), np.tan(lat)
-        nu = a * F0 / np.sqrt(1 - e2 * sin_lat**2)
-        rho = a * F0 * (1 - e2) / (1 - e2 * sin_lat**2) ** 1.5
-        eta2 = nu / rho - 1
-
-        VII = tan_lat / (2 * rho * nu)
-        VIII = (
-            tan_lat
-            / (24 * rho * nu**3)
-            * (5 + 3 * tan_lat**2 + eta2 - 9 * tan_lat**2 * eta2)
+        lat, lon = _inverse_tm(
+            e.to_numpy(dtype=np.float64), n.to_numpy(dtype=np.float64), *_GRS80
         )
-        IX = tan_lat / (720 * rho * nu**5) * (61 + 90 * tan_lat**2 + 45 * tan_lat**4)
-        X = 1.0 / (cos_lat * nu)
-        XI = (nu / rho + 2 * tan_lat**2) / (6 * cos_lat * nu**3)
-        XII = (5 + 28 * tan_lat**2 + 24 * tan_lat**4) / (120 * cos_lat * nu**5)
-        XIIA = (61 + 662 * tan_lat**2 + 1320 * tan_lat**4 + 720 * tan_lat**6) / (
-            5040 * cos_lat * nu**7
-        )
-        dE = E - E0
-        lat_e = lat - VII * dE**2 + VIII * dE**4 - IX * dE**6
-        lon_e = lon0 + X * dE - XI * dE**3 + XII * dE**5 - XIIA * dE**7
-
-        return pd.DataFrame(
-            {"lon": np.degrees(lon_e), "lat": np.degrees(lat_e)}
-        )
+        return pd.DataFrame({"lon": np.degrees(lon), "lat": np.degrees(lat)})
 
     return _reproject

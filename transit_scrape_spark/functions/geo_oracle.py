@@ -1,4 +1,5 @@
-"""SQL mirror of the BNG -> WGS84 reprojection (geo.py pandas_udf).
+"""SQL mirror of the BNG -> WGS84 reprojection (geo.py ``_inverse_tm`` +
+``_helmert_osgb36_to_wgs84``, shared by the point and route UDFs).
 
 Generates a DuckDB CTE chain that replays the numpy algorithm step for
 step — 8 unrolled iterations of the meridional-arc inversion, the OSGB36
@@ -13,7 +14,7 @@ from __future__ import annotations
 import math
 
 # Airy 1830 + National Grid constants (public OS guide) — keep in sync
-# with functions/geo.py reproject_bng_to_wgs84_udf
+# with functions/geo.py _inverse_tm and _helmert_osgb36_to_wgs84
 A_ = 6377563.396
 B_ = 6356256.909
 F0 = 0.9996012717

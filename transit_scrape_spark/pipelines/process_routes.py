@@ -4,12 +4,14 @@ Spark plan instead of a per-row Python loop:
 
     read GeoJSON -> explode features -> derive columns -> reproject -> write
 
+Every step after the read is a per-row map, so the plan has no shuffle.
+
 Reference flow (per-row, interpreted):      Our flow (declarative):
   json.load whole file (:32-33)               spark.read.json (distributed)
   iterrows loop (:82-102)                     Column expressions (codegen)
   geometry.length (:88)                       linestring_length (zip_with/aggregate)
   basename provenance (:95)                   input_file_name()
-  to_crs reproject (:112)                     pandas_udf (Arrow-vectorized)
+  to_crs reproject (:112)                     reproject_routes_bng_to_wgs84 (Arrow UDF, whole routes)
   to_file/to_csv (:149-162)                   write.json/csv (distributed)
 
 CLI mirrors the reference's argparse surface
@@ -25,7 +27,7 @@ from pyspark.sql import functions as F
 
 from transit_scrape_spark.functions.geo import (
     linestring_length,
-    reproject_bng_to_wgs84_udf,
+    reproject_routes_bng_to_wgs84,
 )
 from transit_scrape_spark.sources.geojson import read_geojson_features
 
@@ -34,37 +36,19 @@ def process_route_features(features: DataFrame) -> DataFrame:
     """Derive route_length_m (planar metres in the source CRS) and keep
     provenance; then reproject coordinates BNG -> WGS84.
 
-    One logical plan; errors in individual features become NULLs (the
-    reference skips bad rows, :86-102 — we keep them visible instead of
-    silently dropping; filter on route_length_m IS NOT NULL for parity).
+    One logical plan and one row out per feature: a map over the rows,
+    no shuffle. Bad features become NULLs instead of vanishing (the
+    reference skips bad rows, :86-102 — here they stay visible; filter
+    on route_length_m IS NOT NULL for parity): a null or empty geometry
+    keeps null or empty coordinates, and a null or short vertex gives a
+    null length and a ``[null, null]`` vertex.
     """
-    reproject = reproject_bng_to_wgs84_udf()
-
-    with_len = features.withColumn(
-        "route_length_m", linestring_length(F.col("coordinates"))
+    others = [c for c in features.columns if c != "coordinates"]
+    return features.select(
+        *others,
+        linestring_length(F.col("coordinates")).alias("route_length_m"),
+        reproject_routes_bng_to_wgs84(F.col("coordinates")).alias("coordinates"),
     )
-
-    # explode to vertices, reproject in Arrow batches, regroup in order —
-    # pos keeps vertex order stable through the shuffle-free window
-    exploded = with_len.select(
-        "*", F.posexplode("coordinates").alias("pos", "vertex")
-    ).withColumn("ll", reproject(F.col("vertex")[0], F.col("vertex")[1]))
-
-    group_cols = [c for c in with_len.columns if c != "coordinates"]
-    regrouped = (
-        exploded.groupBy(*group_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("pos", "ll"))
-            ).alias("_verts")
-        )
-        .withColumn(
-            "coordinates",
-            F.transform(F.col("_verts"), lambda v: F.array(v["ll"]["lon"], v["ll"]["lat"])),
-        )
-        .drop("_verts")
-    )
-    return regrouped
 
 
 def run(
