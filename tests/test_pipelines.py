@@ -313,3 +313,18 @@ def test_wkt_roundtrip(spark):
     ).collect()[0]
     assert out["wkt"] == "LINESTRING (1.5 2.5, 3.0 4.0)"
     assert out["back"] == [[1.5, 2.5], [3.0, 4.0]]
+
+
+def test_wkt_parse_empty_and_null(spark):
+    """Both empty-linestring spellings parse to [] (ANSI must not try to
+    cast '' to double); null stays null."""
+    from pyspark.sql import functions as F
+
+    from transit_scrape_spark.functions.geo import wkt_to_linestring
+
+    df = spark.createDataFrame(
+        [("LINESTRING ()",), ("LINESTRING EMPTY",), (None,), ("LINESTRING (1 2)",)],
+        "wkt string",
+    )
+    out = [r["c"] for r in df.select(wkt_to_linestring(F.col("wkt")).alias("c")).collect()]
+    assert out == [[], [], None, [[1.0, 2.0]]]

@@ -70,8 +70,9 @@ def test_gridref_expression_matches_python_on_batch(spark):
 
 def test_wkt_roundtrip_property(spark):
     """wkt_to_linestring(linestring_to_wkt(c)) == c for random finite
-    coordinate lists (doubles survive the string round-trip because
-    Java's shortest-repr double formatting is read back exactly)."""
+    coordinate lists and the empty list (doubles survive the string
+    round-trip because Java's shortest-repr double formatting is read
+    back exactly)."""
     import random
 
     rng = random.Random(42)
@@ -81,7 +82,7 @@ def test_wkt_roundtrip_property(spark):
             for _ in range(rng.randint(2, 10))
         ]
         for _ in range(200)
-    ]
+    ] + [[]]
     from transit_scrape_spark.functions.geo import linestring_to_wkt, wkt_to_linestring
 
     df = spark.createDataFrame(

@@ -70,13 +70,20 @@ def wkt_to_linestring(wkt: Column) -> Column:
 
     Reference: ``GeoSeries.from_wkt`` at app/app.py:81-83.
     Pure string ops: strip envelope, split on ',', then on whitespace.
+    An empty linestring ('LINESTRING ()' as ``linestring_to_wkt([])``
+    writes it, or shapely's 'LINESTRING EMPTY') gives []; null gives null.
     """
-    body = F.regexp_replace(wkt, r"^\s*LINESTRING\s*\(|\)\s*$", "")
-    return F.transform(
+    body = F.trim(
+        F.regexp_replace(wkt, r"^\s*LINESTRING\s*(\(|EMPTY\s*$)|\)\s*$", "")
+    )
+    coords = F.transform(
         F.split(body, ","),
         lambda pt: F.transform(
             F.split(F.trim(pt), r"\s+"), lambda v: v.cast("double")
         ),
+    )
+    return F.when(body == "", F.array().cast("array<array<double>>")).otherwise(
+        coords
     )
 
 

@@ -6,6 +6,16 @@ Postgres (``app/app.py:65-74``, including its injection hazard); here
 each interaction is a parameterized Catalyst plan. A UI (Streamlit,
 notebook, REST) calls these and ``toPandas()`` only at the final
 visualization edge.
+
+One interaction scans the table twice, like the app's two SQL queries:
+the sidebar's DISTINCT and the page's filtered top-k. The page runs
+inside ``load_cycling_routes`` and comes back as a local relation of at
+most ``limit`` rows. The app draws every row of it anyway, so holding it
+on the driver costs nothing extra. Catalyst folds the map-row
+projection into those rows, so ``prepare_map_rows(...).collect()`` runs
+no Spark job, and ``map_center`` aggregates the page instead of running
+the top-k a second time (the reference takes ``total_bounds`` from the
+GeoDataFrame it already holds, app/app.py:94-99).
 """
 
 from __future__ import annotations
@@ -24,12 +34,17 @@ DEFAULT_COLOR = "#3388ff"
 
 
 def get_local_authorities(routes: DataFrame, column: str = "local_authority") -> DataFrame:
-    """Sidebar values: DISTINCT non-null, sorted (app/app.py:46-56)."""
+    """Sidebar values: DISTINCT non-null, sorted (app/app.py:46-56).
+
+    The distinct values are a handful of names, so they are sorted in one
+    partition after the parallel aggregate; a global ``orderBy`` would
+    add a range-partitioner sampling job and a second exchange."""
     return (
         routes.select(column)
         .filter(F.col(column).isNotNull())
         .distinct()
-        .orderBy(column)
+        .coalesce(1)
+        .sortWithinPartitions(column)
     )
 
 
@@ -43,11 +58,18 @@ def load_cycling_routes(
     """Main query: pruned projection + optional equality filter + top-k
     (app/app.py:60-77). `authority=None` == the app's 'All' selection.
     The filter is a Column predicate — no SQL string assembly, no
-    injection surface; Catalyst pushes it to the scan."""
+    injection surface; Catalyst pushes it to the scan.
+
+    The top-k runs when this function is called, not when the result is
+    used: the page (at most ``limit`` rows, ordered by ``id_column``)
+    comes back as a DataFrame over a local relation on the driver, so
+    the caller's collect, map rows and centre reuse it instead of each
+    re-running the scan and the sort."""
     out = routes
     if authority is not None:
         out = out.filter(F.col(authority_column) == F.lit(authority))
-    return out.orderBy(id_column).limit(limit)
+    page = out.orderBy(id_column).limit(limit)
+    return routes.sparkSession.createDataFrame(page.toArrow(), schema=page.schema)
 
 
 def prepare_map_rows(
@@ -78,14 +100,19 @@ def prepare_map_rows(
     )
 
 
-def map_center(routes_with_envelope: DataFrame) -> tuple[float, float]:
-    """total_bounds midpoint (app/app.py:94-99) — one tiny global agg."""
+def map_center(routes_with_envelope: DataFrame) -> tuple[float, float] | None:
+    """total_bounds midpoint (app/app.py:94-99) — one tiny global agg.
+
+    Returns None when there is no envelope to centre on: no rows, or only
+    rows with null or empty geometry."""
     row = routes_with_envelope.agg(
         F.min("envelope.minx").alias("minx"),
         F.min("envelope.miny").alias("miny"),
         F.max("envelope.maxx").alias("maxx"),
         F.max("envelope.maxy").alias("maxy"),
     ).collect()[0]
+    if row["minx"] is None:
+        return None
     return (
         (row["minx"] + row["maxx"]) / 2.0,
         (row["miny"] + row["maxy"]) / 2.0,
