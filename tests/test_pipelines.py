@@ -210,6 +210,127 @@ def test_load_idempotent(spark, geojson_dir, tmp_path):
     assert spark.read.parquet(target).count() == 4
 
 
+def _load_rows(spark, target):
+    return [
+        r.asDict()
+        for r in spark.read.parquet(target)
+        .drop("created_at", "updated_at")
+        .orderBy("route_id")
+        .collect()
+    ]
+
+
+def _with_props(route_id: str, **props) -> dict:
+    return dict(
+        _feature(route_id, COORDS),
+        properties=dict(ROUTE_PROPS, route_id=route_id, **props),
+    )
+
+
+@pytest.mark.parametrize("swap", [False, True], ids=["a-then-b", "b-then-a"])
+def test_load_keeps_one_row_per_key(spark, tmp_path, swap):
+    """Two features with one key in one batch load as ONE row, the same
+    one whichever file holds it."""
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    first, second = ("b.geojson", "a.geojson") if swap else ("a.geojson", "b.geojson")
+    (tmp_path / first).write_text(
+        json.dumps({"type": "FeatureCollection", "features": [
+            _with_props("E1", street="Zeta Road"), _feature("E2", COORDS),
+        ]})
+    )
+    (tmp_path / second).write_text(json.dumps(_with_props("E1", street="Alpha Road")))
+    target = str(tmp_path / "table")
+    assert load(spark, str(tmp_path / "*.geojson"), target) == 2
+    rows = _load_rows(spark, target)
+    assert [r["route_id"] for r in rows] == ["E1", "E2"]
+    assert rows[0]["street"] == "Alpha Road"
+    assert rows[0]["source_file"] == second
+
+
+WKT = "LINESTRING (325940.0 673060.0, 326940.0 673060.0, 326940.0 674060.0)"
+POINT = dict(_feature("P1", COORDS), geometry={"type": "Point", "coordinates": COORDS[0]})
+
+# id: (features, column checked, {route_id: loaded value} or the error condition)
+HOSTILE_BATCHES = {
+    "empty-collection": ([], "route_id", {}),
+    "point-among-lines": (
+        [_feature("L1", COORDS), POINT, _feature("L2", COORDS)],
+        "geometry_wkt",
+        {"L1": WKT, "P1": None, "L2": WKT},
+    ),
+    "numeric-string": ([_with_props("S1", sh_src_id="13")], "sh_src_id", {"S1": 13.0}),
+    "non-numeric-string": (
+        [_with_props("S1", sh_src_id="abc")], "sh_src_id", "CAST_INVALID_INPUT"
+    ),
+    "number-in-string-column": (
+        [_with_props("N1", la_s_code=123)], "la_s_code", {"N1": "123"}
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(HOSTILE_BATCHES), ids=list(HOSTILE_BATCHES))
+def test_load_hostile_batch(spark, tmp_path, case):
+    """The declared STRING scan plus align_to_target's casts: types are set
+    once, by the casts, and one odd feature does not sink its neighbours."""
+    from pyspark.errors import NumberFormatException
+
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    feats, column, want = HOSTILE_BATCHES[case]
+    path = tmp_path / "batch.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+    target = str(tmp_path / "table")
+    if isinstance(want, str):
+        with pytest.raises(NumberFormatException, match=want):
+            load(spark, str(path), target)
+        return
+    assert load(spark, str(path), target) == len(want)
+    assert {r["route_id"]: r[column] for r in _load_rows(spark, target)} == want
+
+
+def test_load_single_execution(spark, geojson_dir, tmp_path):
+    """A fresh load and a reload each run one scan and one write, with
+    no inference or count() pass (a load with both took 4 jobs fresh and
+    9 on reload on this corpus); a no-op rerun adds at most one (empty)
+    part file and no rows."""
+    import os
+    import uuid
+
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    def jobs_run(glob, target):
+        sc = spark.sparkContext
+        group = f"load-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            n = load(spark, glob, target)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def part_files(target):
+        return [f for f in os.listdir(target) if f.endswith(".parquet")]
+
+    batch2 = tmp_path / "batch2"
+    batch2.mkdir()
+    (batch2 / "more.geojson").write_text(
+        json.dumps({"type": "FeatureCollection",
+                    "features": [_feature(r, COORDS) for r in ("R3", "R4", "R5", "R6")]})
+    )
+    target = str(tmp_path / "table")
+
+    n, jobs = jobs_run(str(geojson_dir / "*.geojson"), target)
+    assert n == 4 and jobs <= 2  # scan+dedupe exchange, write
+    n, jobs = jobs_run(str(batch2 / "*.geojson"), target)
+    assert n == 2 and jobs <= 5  # plus the table's key scan for the anti-join
+
+    rows, files = _load_rows(spark, target), part_files(target)
+    assert jobs_run(str(batch2 / "*.geojson"), target)[0] == 0
+    assert _load_rows(spark, target) == rows
+    assert len(part_files(target)) <= len(files) + 1
+
+
 def test_reprojection_golden(spark):
     """Control point: OS guide worked example — BNG (651409.903, 313177.270)
     is 1°43'4.5177"E 52°39'27.2531"N in OSGB36 (lon 1.717921, lat 52.657570).

@@ -1,4 +1,4 @@
-"""Sinks (SURVEY.md §2.1): CSV-with-WKT, GeoJSON, parquet append.
+"""Sinks (SURVEY.md §2.1): CSV-with-WKT, GeoJSON-lines.
 
 The reference writes one local file per run
 (``process_cycle_networks.py:149-162``); a distributed engine writes a
@@ -57,12 +57,3 @@ def write_geojson(
         out = out.coalesce(1)
     out.write.mode("overwrite").text(out_dir)
 
-
-def write_parquet_append(df: DataFrame, out_dir: str, partition_by: list[str] | None = None) -> None:
-    """Append sink replacing the reference's 64k-row JDBC batch loop
-    (db_helpers.py:148-182): partitioned parquet, idempotency handled
-    upstream via anti-join/dedup (SURVEY §7 M3)."""
-    w = df.write.mode("append")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out_dir)
