@@ -73,6 +73,26 @@ def test_scan_bare_list(spark, geojson_dir):
     assert df.count() == 1
 
 
+def test_scan_mixed_shapes_infers_one_schema(spark, tmp_path):
+    """Inferred scan over a FeatureCollection and a single Feature: a
+    property that is 1.5 in one and 2 in the other widens to DOUBLE, and a
+    key only the single Feature carries sits with the other properties,
+    before geometry_type."""
+    from transit_scrape_spark.sources.geojson import read_geojson_features
+
+    (tmp_path / "fc.geojson").write_text(json.dumps(
+        {"type": "FeatureCollection", "features": [_with_props("M1", x=1.5)]}
+    ))
+    (tmp_path / "single.geojson").write_text(json.dumps(_with_props("M2", x=2, only=7)))
+
+    df = read_geojson_features(spark, str(tmp_path))
+    assert df.schema["x"].dataType.simpleString() == "double"
+    assert df.columns.index("only") < df.columns.index("geometry_type")
+    assert {r["route_id"]: (r["x"], r["only"]) for r in df.collect()} == {
+        "M1": (1.5, None), "M2": (2.0, 7)
+    }
+
+
 def test_process_pipeline(spark, geojson_dir, tmp_path):
     from transit_scrape_spark.pipelines.process_routes import run
 
@@ -87,6 +107,22 @@ def test_process_pipeline(spark, geojson_dir, tmp_path):
     # vertex order preserved: second vertex is ~1km east of first
     lon2, _ = rows["R1"]["coordinates"][1]
     assert lon2 > lon
+
+
+@pytest.mark.parametrize("with_single", [False, True], ids=["alone", "next-to-single"])
+def test_process_empty_collection(spark, tmp_path, with_single):
+    """An empty FeatureCollection is zero features, also when the scan
+    infers its schema next to a single Feature."""
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "empty.geojson").write_text(json.dumps({"type": "FeatureCollection", "features": []}))
+    if with_single:
+        (src / "single.geojson").write_text(json.dumps(_feature("S1", COORDS)))
+
+    rows = run(spark, str(src), str(tmp_path / "out"), "parquet").collect()
+    assert [r["route_id"] for r in rows] == (["S1"] if with_single else [])
 
 
 def test_process_keeps_every_feature(spark, tmp_path):

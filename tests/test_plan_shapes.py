@@ -81,6 +81,30 @@ def test_process_routes_is_shuffle_free(spark, tmp_path):
     assert "ArrowEvalPython" in p
 
 
+@pytest.mark.parametrize("properties", [None, "route_id STRING"], ids=["inferred", "declared"])
+def test_geojson_read_is_one_scan(spark, tmp_path, properties):
+    """FeatureCollection, single-Feature and bare-list files are read by
+    one JSON scan and one explode: no second scan, no Union of shapes."""
+    import json
+
+    from transit_scrape_spark.sources.geojson import read_geojson_features
+
+    def feature(route_id):
+        return {"type": "Feature", "properties": {"route_id": route_id},
+                "geometry": {"type": "LineString", "coordinates": [[0.0, 0.0], [1.0, 1.0]]}}
+
+    (tmp_path / "fc.geojson").write_text(
+        json.dumps({"type": "FeatureCollection", "features": [feature("A"), feature("B")]})
+    )
+    (tmp_path / "single.geojson").write_text(json.dumps(feature("C")))
+    (tmp_path / "list.geojson").write_text(json.dumps([feature("D")]))
+    df = read_geojson_features(spark, str(tmp_path), properties=properties)
+    p = executed_plan(df)
+    assert p.count("FileScan json") == 1
+    assert "Union" not in p
+    assert sorted(r["route_id"] for r in df.collect()) == ["A", "B", "C", "D"]
+
+
 def test_lsh_candidates_never_cross_join(spark, sf_dir):
     p = _plan(spark, sf_dir, "dedup-near-minhash")
     assert "CartesianProduct" not in p

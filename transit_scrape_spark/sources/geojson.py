@@ -7,7 +7,11 @@ distributed ``spark.read.json`` plan:
 
 - ``multiLine=true`` because a GeoJSON document is one JSON value.
 - Polymorphic envelope (FeatureCollection / bare [Feature,...] / single
-  Feature — reference branching at :36-43) handled by schema shape.
+  Feature — reference branching at :36-43) read by ONE declared scan and
+  ONE explode: the declared schema gives a FeatureCollection's feature
+  and a bare Feature the same struct type, so each row explodes either
+  its ``features`` array or itself. Inference, when the caller declares
+  no properties, only derives that declared schema.
 - Corrupt files -> ``_corrupt_record`` (PERMISSIVE), mirroring the
   reference's try/except->None (:53-55) without killing the job.
 - A directory/glob path replaces the reference's sequential per-file
@@ -22,14 +26,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def geojson_schema(properties: str, corrupt_col: str | None = None) -> T.StructType:
+def geojson_schema(
+    properties: str | T.StructType, corrupt_col: str | None = None
+) -> T.StructType:
     """Declared polymorphic-envelope schema for a GeoJSON scan.
 
     ``properties`` is a DDL fragment for the feature property keys
-    (e.g. ``"n_nationkey BIGINT, n_name STRING"``). The returned schema
-    declares BOTH envelope shapes (``features`` array for a
-    FeatureCollection, top-level ``properties``/``geometry`` for bare
-    Features), so the same null-routing branches below work unchanged.
+    (e.g. ``"n_nationkey BIGINT, n_name STRING"``), or their struct type.
+    The returned schema declares BOTH envelope shapes (``features`` array
+    for a FeatureCollection, top-level ``type``/``properties``/``geometry``
+    for bare Features) with the same feature struct, so
+    :func:`read_geojson_features` can wrap a bare Feature as a one-element
+    ``features`` array and explode every row the same way.
 
     Why declare instead of infer: at 100 TB schema inference is an extra
     full pass over the corpus, can flip types between runs on sparse
@@ -37,7 +45,7 @@ def geojson_schema(properties: str, corrupt_col: str | None = None) -> T.StructT
     ``features`` array infers to nothing flattenable) — the declared
     schema makes the scan total on quiet-day inputs.
     """
-    prop_t = T.StructType.fromDDL(properties)
+    prop_t = T.StructType.fromDDL(properties) if isinstance(properties, str) else properties
     geom_t = T.StructType(
         [
             T.StructField("type", T.StringType()),
@@ -62,68 +70,71 @@ def geojson_schema(properties: str, corrupt_col: str | None = None) -> T.StructT
     return T.StructType(fields)
 
 
+def _inferred_properties(spark: SparkSession, raw: DataFrame) -> T.StructType:
+    """Property struct of an inferred scan: the ``features`` element's
+    ``properties`` merged with the top-level ``properties``.
+
+    The merge is the schema of ``unionByName(allowMissingColumns=True)``
+    over empty local relations (analysis only, no job), so types widen
+    as a union of the two shapes' rows would widen them. A ``features``
+    column whose element is not a struct comes from FeatureCollections
+    that are all empty (inferred ``array<string>``) and adds no key.
+    """
+    top = {f.name: f.dataType for f in raw.schema}
+    if not top.keys() & {"features", "properties", "geometry"}:
+        raise ValueError(f"not a recognizable GeoJSON shape: columns={sorted(top)}")
+    shapes = [top.get("properties")]
+    feat_t = getattr(top.get("features"), "elementType", None)
+    if isinstance(feat_t, T.StructType) and "properties" in feat_t.names:
+        shapes.insert(0, feat_t["properties"].dataType)
+    merged = T.StructType([])
+    for s in shapes:
+        if isinstance(s, T.StructType):
+            merged = (
+                spark.createDataFrame([], merged)
+                .unionByName(spark.createDataFrame([], s), allowMissingColumns=True)
+                .schema
+            )
+    return merged
+
+
 def read_geojson_features(
     spark: SparkSession,
     path: str,
     multiline: bool = True,
     properties: str | None = None,
 ) -> DataFrame:
-    """Read GeoJSON file(s)/glob -> one row per feature.
+    """Read GeoJSON file(s)/glob -> one row per feature, in one scan.
 
     Output columns: every property key (flattened), plus
     ``geometry_type``, ``coordinates`` (LineString: array<array<double>>),
     and ``source_file`` (basename, reference process_cycle_networks.py:95).
 
-    ``properties`` (DDL fragment of the property keys) switches the scan
-    from inference to the declared envelope schema — see
-    :func:`geojson_schema` for why that is the only correct mode at
-    scale. Inference remains for ad-hoc exploration.
+    Every input is read by one declared scan of :func:`geojson_schema`
+    and one explode: a row's ``features`` array if it is a
+    FeatureCollection, else the row itself as a one-feature array if it
+    has a geometry (single Feature, or an element of a bare list), else
+    nothing (corrupt or shapeless).
+
+    ``properties`` (DDL fragment of the property keys) declares the
+    property struct — see :func:`geojson_schema` for why that is the
+    only correct mode at scale. Without it, one inference pass derives
+    the struct (:func:`_inferred_properties`); a key that only
+    single-Feature or bare-list files carry then comes after the
+    FeatureCollection keys and before ``geometry_type``. Inference
+    remains for ad-hoc exploration.
     """
     reader = spark.read.option("multiLine", "true" if multiline else "false")
-    if properties is not None:
-        reader = reader.schema(geojson_schema(properties))
-    raw = reader.json(path)
-    cols = set(raw.columns)
-
-    def _flatten(feats: DataFrame) -> DataFrame:
-        return feats.select(
-            "f.properties.*",
-            F.col("f.geometry.type").alias("geometry_type"),
-            F.col("f.geometry.coordinates").alias("coordinates"),
-            F.element_at(F.split(F.col("_path"), "/"), -1).alias("source_file"),
-        )
-
-    parts: list[DataFrame] = []
-    if "features" in cols:
-        # FeatureCollection envelope (reference :36-38)
-        parts.append(
-            _flatten(
-                raw.filter(F.col("features").isNotNull()).select(
-                    F.explode("features").alias("f"),
-                    F.input_file_name().alias("_path"),
-                )
-            )
-        )
-    if "geometry" in cols or "properties" in cols:
-        # single Feature or bare [Feature, ...] (reference :39-43 —
-        # spark.read.json already returns one row per array element).
-        # A mixed multi-file scan hits BOTH branches; the null filters
-        # route each row to the branch matching its file's shape.
-        direct = raw
-        if "features" in cols:
-            direct = direct.filter(F.col("features").isNull())
-        parts.append(
-            _flatten(
-                direct.filter(F.col("geometry").isNotNull()).select(
-                    F.struct(*[c for c in raw.columns if c != "features"]).alias("f"),
-                    F.input_file_name().alias("_path"),
-                )
-            )
-        )
-    if not parts:
-        raise ValueError(f"not a recognizable GeoJSON shape: columns={sorted(cols)}")
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    props = _inferred_properties(spark, reader.json(path)) if properties is None else properties
+    raw = reader.schema(geojson_schema(props)).json(path)
+    as_features = F.when(F.col("features").isNotNull(), F.col("features")).when(
+        F.col("geometry").isNotNull(), F.array(F.struct("type", "properties", "geometry"))
+    )
+    return raw.select(
+        F.explode(as_features).alias("f"), F.input_file_name().alias("_path")
+    ).select(
+        "f.properties.*",
+        F.col("f.geometry.type").alias("geometry_type"),
+        F.col("f.geometry.coordinates").alias("coordinates"),
+        F.element_at(F.split(F.col("_path"), "/"), -1).alias("source_file"),
+    )
