@@ -224,3 +224,74 @@ def test_fused_multi_key_matches_global_windows(spark, n_buckets):
     assert bad == 0
     assert got.select("n").distinct().collect()[0][0] == df.count()
     assert global_window_count(executed_plan(got)) == 0
+
+
+@pytest.mark.parametrize("ascending", [True, False])
+def test_null_keys_sort_as_order_by(spark, ascending):
+    """NULL sort keys rank as in ``ORDER BY``: first ascending, last
+    descending — for row_number and for running sums alike."""
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 10 != 0, (F.col("id") * 37 % 13).cast("double"))
+        .alias("v"),
+        (F.col("id") % 7).cast("double").alias("x"),
+    )
+    got = with_global_order(
+        df, "v", ascending=ascending, tiebreakers=("k",), rn="rn",
+        cum_sums={"cx": "x"}, n_buckets=8,
+    )
+    order = [F.col("v").asc() if ascending else F.col("v").desc(), F.col("k")]
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select(
+        "k", F.row_number().over(w).alias("rn"), F.sum("x").over(w).alias("cx")
+    )
+    j = got.select("k", "rn", "cx").alias("g").join(want.alias("w"), "k")
+    bad = j.filter(
+        (F.col("g.rn") != F.col("w.rn"))
+        | ~F.col("g.cx").eqNullSafe(F.col("w.cx"))
+    )
+    assert bad.count() == 0
+
+
+@pytest.mark.parametrize(
+    "case, budget",
+    [("rank-totals", 7), ("rank-cum-sums", 7), ("fused-two-keys", 11)],
+)
+def test_helper_job_budget(spark, case, budget):
+    """One range sort, one small offset collect and (for running sums)
+    one partitioned window per key: a noop write of the ranked 500-row
+    frame stays within a fixed number of Spark jobs (the percentile-
+    sketch form ran 13, 13 and 21)."""
+    import uuid
+
+    from transit_scrape_spark.operators.ranking import with_global_orders
+    from transit_scrape_spark.session import release_caches
+
+    df = _mk(spark)
+    build = {
+        "rank-totals": lambda: with_global_order(
+            df, "v", tiebreakers=("k",), rn="rn", total_count="n",
+            total_sums={"tx": "x"},
+        ),
+        "rank-cum-sums": lambda: with_global_order(
+            df, "v", tiebreakers=("k",), rn="rn", cum_sums={"cx": "x"},
+        ),
+        "fused-two-keys": lambda: with_global_orders(
+            df,
+            [
+                {"key": "v", "rn": "rv", "tiebreakers": ("k",)},
+                {"key": "x", "ascending": False, "rn": "rx",
+                 "tiebreakers": ("k",)},
+            ],
+            total_count="n",
+        ),
+    }[case]
+    sc = spark.sparkContext
+    group = f"rank-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build().write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_caches(spark)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= budget

@@ -171,17 +171,6 @@ SCALAR_BROADCAST_OPS = {
     "sample-neyman-allocation",  # 1-row allocation-total broadcast
     "stats-ewma-control-chart",  # 1-row (mu, sd) baseline broadcast
     "text-js-divergence",  # 1-row side-totals broadcast (was a global window)
-    # operators/ranking.py two-phase global rank: each call broadcasts a
-    # 1-row percentile-boundary array and a <=n_buckets-row offset
-    # table into the data — the conditionless BNLJ is over those
-    # constant-size sides only (the r5 rework that removed these ops'
-    # unbounded global windows).
-    "agg-gini-coefficient",
-    "analytics-abc-xyz",
-    "analytics-lift-chart",
-    "analytics-pareto-point",
-    "text-heaps-law",
-    "text-ngram-novelty",
     # round-5 ml/eval wave: each broadcasts a 1-row scalar summary
     # (global prior, corpus stats, current beta vector, strength
     # normalizer, observation high-water mark) into a conditionless join
@@ -198,7 +187,6 @@ SCALAR_BROADCAST_OPS = {
     "rec-coverage-novelty",    # 1-row catalog-totals broadcast + 20-row rec list
     "timeseries-ses-grid",     # 1-row series-mean + 1-row best-SSE broadcasts
     "timeseries-matrix-profile-discord",  # bounded day-window block join
-    "corpus-curriculum-order", # ranking-helper boundary-array broadcast
     "ml-woe-iv",               # 1-row class-totals broadcast
     "stats-copula-tail-dependence",  # 1-row quantile-thresholds broadcast
     "text-self-bleu-lite",     # 1-row sample-count broadcast
@@ -313,8 +301,8 @@ MULTI_SCAN_JUSTIFIED: dict[str, str] = {}
 # include AQE's Initial Plan section): if an op grows an EXTRA global
 # window, it flags even though the op is listed. Ops with global
 # windows over frames that grow with the data (per-customer, per-doc,
-# per-user, raw events) are NOT excusable — they must use the two-phase
-# bucketed rank in operators/ranking.py (see agg-gini-coefficient,
+# per-user, raw events) are NOT excusable — they must use the
+# range-sort rank in operators/ranking.py (see agg-gini-coefficient,
 # analytics-rfm, window-session-concurrency for the pattern).
 # global_window_count already auto-clears rank<=k top-k windows (their
 # input is TakeOrderedAndProject/WindowGroupLimit-pruned by Catalyst).
@@ -822,7 +810,7 @@ def main() -> None:
             "Python-surface ops), GLOBAL-WINDOW (empty-partition Window "
             "over a frame not pinned as bounded in BOUNDED_WINDOW_OPS — "
             "the single-task scale hazard; unbounded frames must use the "
-            "two-phase rank in operators/ranking.py), TABLE-RESCAN "
+            "range-sort rank in operators/ranking.py), TABLE-RESCAN "
             "(one fact table scanned >= 3x in a single plan — the "
             "repeated-subtree signature; justified ops carry a reason "
             "in MULTI_SCAN_JUSTIFIED backed by a code NOTE), "

@@ -81,7 +81,7 @@ R4_HEAVY = [
     "embed-centroid-margin",
 ]
 # round-5 rework proof (VERDICT r4 items 1/8): the ops whose unbounded
-# global windows were replaced by the two-phase bucketed rank in
+# global windows were replaced by the range-sort rank in
 # operators/ranking.py — their 10x ratio pins the fix at scale, not
 # just in the plan audit
 R5_REWORKED = [

@@ -68,8 +68,8 @@ HEADLINERS = [
     "agg-multi-distinct-expand",
     "geo-grid-rollup-multires",
     # round 5
-    "agg-gini-coefficient",      # two-phase bucketed global rank
-    "abc-revenue-deciles",       # exact_ntile over the bucketed rank
+    "agg-gini-coefficient",      # range-sort global rank
+    "abc-revenue-deciles",       # exact_ntile over the range-sort rank
     "window-session-concurrency",  # day-bucketed sweep-line prefix sums
     "eval-bm25-topk",
     "ml-logistic-irls",

@@ -8,35 +8,32 @@ through one task. Fine over a 10-row decile summary; a scale-killer over
 a per-customer/per-document rollup whose cardinality grows with the
 data (at 100 TB, "all customers" is billions of rows).
 
-The fix is the classic two-phase (tera-sort style) rank:
+The fix is one range-partitioned sort:
 
-1. **Bucket** rows into ordered ranges. Range boundaries come from
-   ``percentile_approx`` over the sort key — a distributed sketch
-   aggregate producing ≤ ``n_buckets`` numbers. The boundaries only
-   need to be *monotone*, not exact: the final rank is exact for ANY
-   boundary choice, because ties of the sort key always land in the
-   same bucket (strict ``>`` comparison) and bucket id is
-   non-decreasing in the key.
-2. **Rank locally** inside each bucket with a *partitioned* window
-   (shuffle on bucket id, per-partition sort — fully parallel).
-3. **Offset** each bucket's local ranks/sums by the totals of all
-   earlier buckets. The per-bucket summary is ≤ ``n_buckets`` rows; it
-   is collapsed to ONE row (``collect_list`` + ``sort_array``) and the
-   prefix sums are computed with array expressions — deliberately NOT
-   with another empty-partition window, so plans built on this helper
-   contain zero global-window nodes and ``tools/audit_plans.py`` can
-   keep a hard "no unbounded global windows" rule.
+1. **Sort** with ``orderBy(key, *tiebreakers)``. Spark's range exchange
+   samples its own boundaries and leaves partition ``p`` holding rows
+   that all sort before those of partition ``p + 1``; each partition is
+   then sorted locally, in parallel.
+2. **Position** each row with one ``monotonically_increasing_id`` over
+   the sorted frame, which encodes the partition index (high 31 bits)
+   and the row's position inside it (low 33 bits). That frame is
+   persisted, so every later read sees the same ids.
+3. **Offset** each partition by the rows (and sums) of all earlier
+   partitions: one ``groupBy(partition)`` of at most shuffle-width rows
+   is collected, prefix-summed in Python, and applied to every row
+   as a literal array lookup. Grand totals come out of the same pass.
 
-The result is bit-identical to the single-partition
-``row_number()/sum() OVER (ORDER BY key, *tiebreakers)`` as long as
-``(key, *tiebreakers)`` is a total order (the same determinism
-discipline every oracle in this repo already follows).
+Running sums (``cum_sums``) add one window partitioned by the sort
+partition and ordered by the id; no plan built on this helper contains
+an empty-partition window, so ``tools/audit_plans.py`` keeps a hard "no
+unbounded global windows" rule.
 
-Equivalent semantics, different plan:
-
-- before: 1 exchange to a single partition + serial sort of N rows.
-- after: 1 sketch agg + 1 hash-partitioned window over N/n_buckets-row
-  partitions + 1 broadcast join against a ≤n_buckets-row offset table.
+The ranks equal the single-partition ``row_number() OVER (ORDER BY
+key, *tiebreakers)`` as long as ``(key, *tiebreakers)`` is a total
+order (the same determinism discipline every oracle in this repo
+already follows), for ANY range boundaries, because the exchange keeps
+partitions in sort order; running sums equal ``sum() OVER`` the same
+order up to floating-point summation order.
 
 ``exact_ntile`` converts the exact global rank into ANSI ``ntile(k)``
 bucket ids (first ``N mod k`` buckets get ``ceil(N/k)`` rows) so
@@ -47,11 +44,15 @@ approx-percentile drift at bucket edges.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["with_global_order", "with_global_orders", "exact_ntile"]
+
+# monotonically_increasing_id puts the partition index above bit 33
+_POS_BITS = 33
 
 
 def with_global_order(
@@ -64,216 +65,97 @@ def with_global_order(
     cum_sums: Mapping[str, str] | None = None,
     total_count: str | None = None,
     total_sums: Mapping[str, str] | None = None,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Add exact global-order columns to ``df`` with no single-partition
     window.
 
+    The sort runs, and the per-partition offsets are collected, when
+    this function is CALLED (a few small jobs); the returned frame reads
+    the persisted sorted rows. Time the call together with the action
+    that consumes its result (``bench.py`` and ``perfbench`` do), and
+    expect ``tools/audit_plans.py`` to execute this part of an op while
+    it plans. Positions and offsets must come from the same persisted
+    materialization: ``monotonically_increasing_id`` is only stable
+    while the sorted frame stays cached, so the result is valid until
+    ``release_caches()`` (which the registry calls after each op).
+
     Args:
-        key: numeric, non-null column defining the primary sort.
+        key: sort column of any orderable type. NULLs sort as in
+            ``ORDER BY``: first ascending, last descending.
         ascending: sort direction for ``key`` (tiebreakers are always
             ascending, matching the ``ORDER BY key [DESC], tb1, tb2``
             oracles this repo writes).
         tiebreakers: columns completing a total order.
         rn: output name for the exact global ``row_number`` (None to skip).
         cum_sums: ``{out: src}`` inclusive running sums in global order,
-            i.e. ``sum(src) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``.
+            i.e. ``sum(src) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING)``:
+            NULL until the first non-null ``src``, DOUBLE after.
         total_count: output name for the grand row count (None to skip).
-        total_sums: ``{out: src}`` grand totals attached to every row.
-        n_buckets: range-bucket fan-out. Equality of results does not
-            depend on it; parallelism does (N/n_buckets rows per sort
-            task). At 100 TB raise it toward ~2-3x the cluster's cores.
+        total_sums: ``{out: src}`` grand totals (DOUBLE, NULLs counted as
+            0) attached to every row.
+        n_buckets: range-partition count of the sort; None uses the
+            session's shuffle width. Results do not depend on it.
     """
     cum_sums = dict(cum_sums or {})
     total_sums = dict(total_sums or {})
-    # every src needing a per-bucket sum (for prefix offsets or totals)
     srcs = sorted(set(cum_sums.values()) | set(total_sums.values()))
 
-    skey = F.col(key) if ascending else -F.col(key)
-    d = df.withColumn("__go_skey", skey.cast("double"))
-    # the input lineage is consumed THREE times below (boundary sketch,
-    # windowed main path, per-bucket offset summary); unpersisted, every
-    # caller paid its rollup pipeline 3x (r11 — text-heaps-law executed
-    # the token explode 4x). The frame is by construction the rollup the
-    # caller wants globally ordered, i.e. already reduced; registry-level
-    # release_caches() reclaims it after the op's output materializes.
-    if not d.isStreaming:
-        d = d.persist()
-
-    # 1. boundary sketch (one distributed agg; result is ≤ n_buckets-1
-    #    doubles broadcast to every task)
-    probs = F.array(*[F.lit(i / n_buckets) for i in range(1, n_buckets)])
-    bnds = d.agg(
-        F.array_distinct(
-            F.sort_array(
-                F.percentile_approx(F.col("__go_skey"), probs, F.lit(1000))
-            )
-        ).alias("__go_bnds")
-    )
-    d = d.crossJoin(F.broadcast(bnds))
-    # bucket id = number of boundaries strictly below the key: monotone
-    # in the key, and key-ties share a bucket — both required for phase-3
-    # offsets to reconstruct the exact global order.
-    d = d.withColumn(
-        "__go_pid",
-        F.coalesce(
-            F.aggregate(
-                "__go_bnds",
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col("__go_skey") > b, 1).otherwise(0),
-            ),
-            F.lit(0),
-        ),
-    ).drop("__go_bnds")
-
-    # 2. partitioned (parallel) local ranking — ordered by the ORIGINAL
-    #    key column, not the double sketch key: the double cast is only
-    #    used for bucketing (where monotonicity suffices), so integer or
-    #    decimal keys beyond 2^53 still sort exactly like the oracle's
-    #    ORDER BY instead of collapsing to tiebreakers.
     key_order = F.col(key).asc() if ascending else F.col(key).desc()
     order = [key_order] + [F.col(t).asc() for t in tiebreakers]
-    w_local = (
-        Window.partitionBy("__go_pid")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local_cols = [F.row_number().over(w_local).alias("__go_lrn")]
-    for out, src in cum_sums.items():
-        local_cols.append(
-            F.sum(F.col(src).cast("double")).over(w_local).alias(f"__go_lc_{out}")
-        )
-        # local non-null count of src: with the per-bucket prefix count it
-        # decides whether ANY non-null precedes this row in global order,
-        # which is what makes the NULL semantics match the oracle window
-        # (NULL until the first non-null src, never again after).
-        local_cols.append(
-            F.count(F.col(src)).over(w_local).alias(f"__go_ln_{out}")
-        )
-    d = d.select("*", *local_cols)
+    if n_buckets is None:
+        d = df.orderBy(*order)
+    else:
+        d = df.repartitionByRange(n_buckets, *order)
+        d = d.sortWithinPartitions(*order)
+    d = d.withColumn("__go_id", F.monotonically_increasing_id()).persist()
+    d = d.withColumn("__go_pid", F.shiftrightunsigned("__go_id", _POS_BITS))
 
-    # 3. per-bucket summary -> ONE packed row -> array prefix sums
-    #    (linear accumulator pass; O(n_buckets) expression, O(1) w.r.t.
-    #    the data).
-    # coalesce each per-bucket sum to 0: an all-NULL src in one bucket
-    # would otherwise NULL that bucket's sum and poison the array-prefix
-    # (acc + x[field]) for every later bucket's offset.
-    aggs = (
-        [F.count(F.lit(1)).cast("long").alias("__go_cnt")]
-        + [
-            F.coalesce(F.sum(s), F.lit(0.0)).alias(f"__go_s{i}")
-            for i, s in enumerate(srcs)
-        ]
-        # per-bucket NON-NULL counts: carried through the prefix pass so
-        # each bucket knows how many non-null srcs precede it globally
-        + [
-            F.count(F.col(s)).cast("long").alias(f"__go_n{i}")
-            for i, s in enumerate(srcs)
-        ]
-    )
-    grp = d.groupBy("__go_pid").agg(*aggs)
-    packed = grp.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "__go_pid",
-                    "__go_cnt",
-                    *[f"__go_s{i}" for i in range(len(srcs))],
-                    *[f"__go_n{i}" for i in range(len(srcs))],
-                )
-            )
-        ).alias("__go_rows")
+    # per partition: row count, then (sum, non-null count) per src; a
+    # NULL sum counts as 0 so an all-NULL partition cannot NULL the
+    # offsets of later ones (the non-null counts decide NULL output)
+    aggs = [F.count(F.lit(1))]
+    for s in srcs:
+        aggs += [F.sum(s).cast("double"), F.count(s)]
+    rows = d.groupBy("__go_pid").agg(*aggs).collect()
+    zero = [0] * len(aggs)
+    per = {r[0]: [v or 0 for v in r[1:]] for r in rows}
+    per = [per.get(p, zero) for p in range(1 + max(per, default=0))]
+    # offs[p]: totals of all partitions before p; offs[-1]: grand totals
+    offs = list(
+        accumulate(per, lambda a, b: [x + y for x, y in zip(a, b)], initial=zero)
     )
 
-    # Linear running-accumulator prefix: ONE F.aggregate pass carries
-    # (emitted offsets so far, running count, running sums) through the
-    # sorted bucket rows, so each bucket's offset is the accumulator
-    # value BEFORE adding that bucket — and the final accumulator IS the
-    # grand total. The previous transform+slice form re-aggregated a
-    # prefix slice per bucket position: O(n_buckets^2) expression nodes,
-    # whose per-query codegen compile cost dominated small/medium inputs
-    # (~1-3s per call regardless of data size).
-    rows_c = F.col("__go_rows")
-    elem_ddl = (
-        "struct<__go_pid:int,__go_off_rn:bigint"
-        + "".join(f",__go_off_{j}:double" for j in range(len(srcs)))
-        + "".join(f",__go_offn_{j}:bigint" for j in range(len(srcs)))
-        + ">"
-    )
-    zero = F.struct(
-        F.array().cast(f"array<{elem_ddl}>").alias("offs"),
-        F.lit(0).cast("long").alias("rc"),
-        *[F.lit(0.0).alias(f"rs{j}") for j in range(len(srcs))],
-        *[F.lit(0).cast("long").alias(f"rn{j}") for j in range(len(srcs))],
-    )
+    def at(j: int, dtype: str) -> Column:
+        """Summary column ``j`` of the offset of this row's partition."""
+        arr = F.lit([o[j] for o in offs[:-1]]).cast(f"array<{dtype}>")
+        return arr[F.col("__go_pid")]
 
-    def step(acc: Column, x: Column) -> Column:
-        entry = F.struct(
-            x["__go_pid"].cast("int").alias("__go_pid"),
-            acc["rc"].alias("__go_off_rn"),
-            *[
-                acc[f"rs{j}"].alias(f"__go_off_{j}")
-                for j in range(len(srcs))
-            ],
-            *[
-                acc[f"rn{j}"].alias(f"__go_offn_{j}")
-                for j in range(len(srcs))
-            ],
-        )
-        return F.struct(
-            F.concat(acc["offs"], F.array(entry)).alias("offs"),
-            (acc["rc"] + x["__go_cnt"].cast("long")).alias("rc"),
-            *[
-                (acc[f"rs{j}"] + x[f"__go_s{j}"].cast("double")).alias(
-                    f"rs{j}"
-                )
-                for j in range(len(srcs))
-            ],
-            *[
-                (acc[f"rn{j}"] + x[f"__go_n{j}"].cast("long")).alias(
-                    f"rn{j}"
-                )
-                for j in range(len(srcs))
-            ],
-        )
-
-    acc_df = packed.select(F.aggregate(rows_c, zero, step).alias("acc"))
-    offsets = acc_df.select(
-        F.explode(F.col("acc.offs")).alias("o"),
-        F.col("acc.rc").alias("__go_n_total"),
-        *[
-            F.col(f"acc.rs{j}").alias(f"__go_tot_{j}")
-            for j in range(len(srcs))
-        ],
-    ).select("o.*", "__go_n_total", *[f"__go_tot_{j}" for j in range(len(srcs))])
-
-    d = d.join(F.broadcast(offsets), "__go_pid")
-
-    # assemble requested outputs
     out_cols = [F.col(c) for c in df.columns]
     if rn is not None:
-        out_cols.append(
-            (F.col("__go_off_rn") + F.col("__go_lrn")).cast("long").alias(rn)
-        )
-    src_idx = {s: i for i, s in enumerate(srcs)}
+        pos = F.col("__go_id").bitwiseAND((1 << _POS_BITS) - 1)
+        out_cols.append((at(0, "bigint") + pos + 1).alias(rn))
+    w = (
+        Window.partitionBy("__go_pid")
+        .orderBy("__go_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     for out, src in cum_sums.items():
-        i = src_idx[src]
-        # oracle semantics: sum() OVER (... ROWS UNBOUNDED PRECEDING) is
-        # NULL exactly until the first non-null src in global order. The
-        # per-bucket sums are coalesced to 0 (so an all-NULL bucket can't
-        # poison later offsets); the nn counts decide when to emit NULL.
+        j = 1 + 2 * srcs.index(src)
+        local = F.sum(F.col(src).cast("double")).over(w)
+        # sum() OVER (... ROWS UNBOUNDED PRECEDING) is NULL exactly until
+        # the first non-null src in global order
         out_cols.append(
             F.when(
-                F.col(f"__go_offn_{i}") + F.col(f"__go_ln_{out}") > 0,
-                F.col(f"__go_off_{i}")
-                + F.coalesce(F.col(f"__go_lc_{out}"), F.lit(0.0)),
+                at(j + 1, "bigint") + F.count(src).over(w) > 0,
+                at(j, "double") + F.coalesce(local, F.lit(0.0)),
             ).alias(out)
         )
     if total_count is not None:
-        out_cols.append(F.col("__go_n_total").alias(total_count))
+        out_cols.append(F.lit(offs[-1][0]).cast("long").alias(total_count))
     for out, src in total_sums.items():
-        out_cols.append(F.col(f"__go_tot_{src_idx[src]}").alias(out))
+        total = offs[-1][1 + 2 * srcs.index(src)]
+        out_cols.append(F.lit(float(total)).alias(out))
     return d.select(*out_cols)
 
 
@@ -305,131 +187,23 @@ def with_global_orders(
     specs: Sequence[Mapping],
     *,
     total_count: str | None = None,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> DataFrame:
-    """Fused multi-key variant of :func:`with_global_order`: exact global
-    ``row_number`` over SEVERAL independent sort orders in one plan.
+    """Exact global ``row_number`` over several independent sort orders:
+    one :func:`with_global_order` call per spec, chained.
 
-    Each spec is a mapping with ``key`` (numeric, non-null column),
-    ``rn`` (output name), optional ``ascending`` (default True) and
-    ``tiebreakers``. Semantics per spec are identical to
-    ``with_global_order(df, key, rn=...)``; the fusion is purely a plan
-    shape win for scoring ops that rank the SAME rollup by k different
-    dimensions (RFM's three quintiles):
-
-    - ONE boundary-sketch aggregate + ONE 1-row broadcast carries every
-      key's bucket boundaries (vs k sketch jobs + k broadcasts);
-    - the k local-rank windows chain over one frame — k shuffles, which
-      the independent-branch form also pays, but WITHOUT the k re-joins
-      on the row key to reassemble the rank columns afterwards;
-    - per-key bucket counts come from the pre-window bucket-id frame, so
-      no offset aggregate re-runs a window.
+    Each spec is a mapping with ``key``, ``rn`` (output name), optional
+    ``ascending`` (default True) and ``tiebreakers``. Output columns are
+    ``df``'s, then each spec's ``rn``, then ``total_count``.
     """
-    specs = [dict(s) for s in specs]
-    for s in specs:
-        s.setdefault("ascending", True)
-        s.setdefault("tiebreakers", ())
-
-    d = df
-    probs = F.array(*[F.lit(i / n_buckets) for i in range(1, n_buckets)])
-    bnd_aggs = []
-    for k, s in enumerate(specs):
-        skey = F.col(s["key"]) if s["ascending"] else -F.col(s["key"])
-        d = d.withColumn(f"__go_skey{k}", skey.cast("double"))
-        bnd_aggs.append(
-            F.array_distinct(
-                F.sort_array(
-                    F.percentile_approx(
-                        F.col(f"__go_skey{k}"), probs, F.lit(1000)
-                    )
-                )
-            ).alias(f"__go_bnds{k}")
+    for i, s in enumerate(specs):
+        df = with_global_order(
+            df,
+            s["key"],
+            ascending=s.get("ascending", True),
+            tiebreakers=s.get("tiebreakers", ()),
+            rn=s["rn"],
+            total_count=total_count if i == len(specs) - 1 else None,
+            n_buckets=n_buckets,
         )
-    # consumed 2+k times (sketch, main path, k per-spec offset passes) —
-    # same persist rationale as with_global_order (r11)
-    if not d.isStreaming:
-        d = d.persist()
-    bnds = d.agg(*bnd_aggs)
-    d = d.crossJoin(F.broadcast(bnds))
-    def _bucketer(skey_col: str):
-        # closure factory: pyspark counts lambda PARAMETERS to pick the
-        # HOF arity, so a default-arg capture (lambda acc, b, _k=k: ...)
-        # is misread as the 3-arg (acc, x, i) form
-        return lambda acc, b: acc + F.when(
-            F.col(skey_col) > b, 1
-        ).otherwise(0)
-
-    for k in range(len(specs)):
-        d = d.withColumn(
-            f"__go_pid{k}",
-            F.coalesce(
-                F.aggregate(
-                    f"__go_bnds{k}", F.lit(0), _bucketer(f"__go_skey{k}")
-                ),
-                F.lit(0),
-            ),
-        )
-    d = d.drop(*[f"__go_bnds{k}" for k in range(len(specs))])
-    pre_window = d  # bucket ids only — offset counts come from here
-
-    for k, s in enumerate(specs):
-        key_order = (
-            F.col(s["key"]).asc() if s["ascending"] else F.col(s["key"]).desc()
-        )
-        w_local = Window.partitionBy(f"__go_pid{k}").orderBy(
-            key_order, *[F.col(t).asc() for t in s["tiebreakers"]]
-        )
-        d = d.withColumn(f"__go_lrn{k}", F.row_number().over(w_local))
-
-    elem_ddl = "struct<__go_pid:int,__go_off_rn:bigint>"
-    zero = F.struct(
-        F.array().cast(f"array<{elem_ddl}>").alias("offs"),
-        F.lit(0).cast("long").alias("rc"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        entry = F.struct(
-            x["__go_pid"].cast("int").alias("__go_pid"),
-            acc["rc"].alias("__go_off_rn"),
-        )
-        return F.struct(
-            F.concat(acc["offs"], F.array(entry)).alias("offs"),
-            (acc["rc"] + x["__go_cnt"].cast("long")).alias("rc"),
-        )
-
-    for k in range(len(specs)):
-        grp = pre_window.groupBy(
-            F.col(f"__go_pid{k}").alias("__go_pid")
-        ).agg(F.count(F.lit(1)).cast("long").alias("__go_cnt"))
-        packed = grp.agg(
-            F.sort_array(
-                F.collect_list(F.struct("__go_pid", "__go_cnt"))
-            ).alias("__go_rows")
-        )
-        acc_df = packed.select(
-            F.aggregate(F.col("__go_rows"), zero, step).alias("acc")
-        )
-        off_cols = [
-            F.col("o.__go_pid").alias(f"__go_pid{k}"),
-            F.col("o.__go_off_rn").alias(f"__go_off{k}"),
-        ]
-        if k == 0 and total_count is not None:
-            offsets = acc_df.select(
-                F.explode(F.col("acc.offs")).alias("o"),
-                F.col("acc.rc").alias("__go_n_total"),
-            ).select(*off_cols, "__go_n_total")
-        else:
-            offsets = acc_df.select(
-                F.explode(F.col("acc.offs")).alias("o")
-            ).select(*off_cols)
-        d = d.join(F.broadcast(offsets), f"__go_pid{k}")
-
-    out_cols = [F.col(c) for c in df.columns] + [
-        (F.col(f"__go_off{k}") + F.col(f"__go_lrn{k}"))
-        .cast("long")
-        .alias(s["rn"])
-        for k, s in enumerate(specs)
-    ]
-    if total_count is not None:
-        out_cols.append(F.col("__go_n_total").alias(total_count))
-    return d.select(*out_cols)
+    return df

@@ -1396,7 +1396,7 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Revenue-concentration deciles (the 80/20 audit): per-customer "
     "revenue, ntile(10) by descending revenue, per-decile share of "
-    "total. The decile cut uses the two-phase bucketed rank from "
+    "total. The decile cut uses the range-sort rank from "
     "operators/ranking.py (the customer frame grows with the data, "
     "so no global ntile window); exact_ntile reproduces ANSI ntile "
     "bucket sizes; revenue sums go through DECIMAL so partition "
@@ -1622,8 +1622,8 @@ def simsearch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "re-derivation, and because the output is keyed by DAY the prefix "
     "buckets ARE the days: a per-day local cumsum plus a running "
     "opening offset over the per-day delta totals (a calendar-bounded "
-    "global window, |days| rows) replaces the generic percentile-"
-    "bucketed helper. One agg computes each day's max local prefix and "
+    "global window, |days| rows) replaces the generic rank "
+    "helper. One agg computes each day's max local prefix and "
     "its total delta, so the whole op is two shuffles and one pass.",
 )
 def window_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -508,11 +508,11 @@ def basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Gini coefficient of customer revenue (the inequality summary "
     "behind concentration dashboards): rank-weighted sum formula "
     "G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n over ascending-sorted "
-    "values. The global rank is the two-phase bucketed rank from "
-    "operators/ranking.py (boundary sketch -> partitioned local "
-    "rank -> broadcast prefix offsets), so the per-customer frame — "
-    "which grows with the data — never funnels through one "
-    "partition; count/total ride the same offset table. "
+    "values. The global rank comes from one range-partitioned sort "
+    "in operators/ranking.py (per-partition offsets prefix-summed "
+    "in Python), so the per-customer frame — which grows with "
+    "the data — never funnels through one partition; count/total "
+    "come from the same offset pass. "
     "Degenerate-to-uniform check: all-equal revenues give G=0, "
     "one-customer-takes-all gives G->1.",
 )
@@ -955,37 +955,23 @@ def analytics_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "monetary",
         )
     )
-    # three exact global ranks via the two-phase bucketed rank
-    # (operators/ranking.py) — the customer frame grows with the data,
-    # so the old ntile-over-global-window form would serialize all
-    # customers through one task; exact_ntile reproduces ANSI ntile
-    # bucket sizes from the exact rank.
-    #
-    # The three ranks run FUSED in one plan (with_global_orders): one
-    # boundary-sketch broadcast for all three keys, three chained
-    # partitioned windows over the persisted rollup, three tiny offset
-    # broadcasts — and no re-join on custkey. CHAINING three separate
-    # with_global_order calls (r5 shape) nested each helper's input
-    # references inside the next — 128 parquet scans / 342 exchanges
-    # with zero reuse; measured 4.9s -> ~1.7s at sf0.1, flat from
-    # sf0.001 to sf0.1 (the recompute blow-up, not the data, was the
-    # cost). release_caches() (bench/tests/driver teardown) drops the
-    # persist.
+    # three exact global ranks from range sorts (operators/ranking.py):
+    # the customer frame grows with the data, so no ntile window over
+    # all customers; exact_ntile reproduces ANSI ntile bucket sizes from
+    # the exact rank. Each call sorts the persisted output of the one
+    # before; release_caches() drops them once the output is written.
     from transit_scrape_spark.operators.ranking import (
         exact_ntile,
-        with_global_orders,
+        with_global_order,
     )
 
-    g = with_global_orders(
-        cust.persist(),
-        [
-            {"key": "recency_days", "rn": "__r_rn",
-             "tiebreakers": ("custkey",)},
-            {"key": "frequency", "ascending": False, "rn": "__f_rn",
-             "tiebreakers": ("custkey",)},
-            {"key": "monetary", "ascending": False, "rn": "__m_rn",
-             "tiebreakers": ("custkey",)},
-        ],
+    tb = ("custkey",)
+    g = with_global_order(cust, "recency_days", tiebreakers=tb, rn="__r_rn")
+    g = with_global_order(
+        g, "frequency", ascending=False, tiebreakers=tb, rn="__f_rn"
+    )
+    g = with_global_order(
+        g, "monetary", ascending=False, tiebreakers=tb, rn="__m_rn",
         total_count="__n",
     )
     n = F.col("__n")
@@ -2775,7 +2761,7 @@ def analytics_lift_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("converted"),
     )
-    # two-phase bucketed rank (operators/ranking.py) replaces the old
+    # exact rank from a range sort (operators/ranking.py) instead of an
     # ntile global window over the per-user frame (grows with the
     # data). The per-user running sum of conversions in score order is
     # monotone, so each decile's cumulative gain is simply the MAX of
@@ -3252,9 +3238,9 @@ def analytics_pareto_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("r"))
-    # two-phase bucketed rank + running sum (operators/ranking.py): the
-    # per-customer frame grows with the data, so the old global-window
-    # form would serialize it through one task at scale.
+    # exact rank + running sum from a range sort (operators/ranking.py):
+    # the per-customer frame grows with the data, so a global window
+    # would serialize it through one task at scale.
     cum = with_global_order(
         rev,
         "r",
@@ -3907,7 +3893,7 @@ def analytics_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.stddev_samp("l_quantity").alias("sq"),
         F.count("*").alias("n_lines"),
     )
-    # two-phase bucketed running share (operators/ranking.py): the
+    # running share from a range sort (operators/ranking.py): the
     # per-part frame grows with the catalog, so no global window.
     ranked = with_global_order(
         part_rev.filter(F.col("n_lines") >= 2),

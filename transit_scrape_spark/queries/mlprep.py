@@ -705,7 +705,7 @@ def rec_coverage_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "data-ordering curriculum shown to stabilize early LLM training. "
     "The cut must be EXACT and deterministic (a fuzzy boundary "
     "reshuffles phases between runs and breaks resumable training), "
-    "so the ntile runs as the two-phase bucketed rank from "
+    "so the ntile runs as the range-sort rank from "
     "operators/ranking.py — the document frame grows with the "
     "corpus, and this op is the curriculum-shaped demonstration "
     "that exact global ordering needs no single-partition sort. "

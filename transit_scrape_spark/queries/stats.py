@@ -2351,9 +2351,8 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("n_chars").isNotNull()
     )
-    # quintile strata via the two-phase bucketed rank
-    # (operators/ranking.py) — document frame grows with the corpus,
-    # so no ntile global window.
+    # quintile strata via the range-sort rank (operators/ranking.py) —
+    # document frame grows with the corpus, so no ntile global window.
     g = with_global_order(
         d.select("doc_id", "n_chars"), "n_chars", tiebreakers=("doc_id",),
         rn="__rn", total_count="__n",

@@ -2242,9 +2242,9 @@ def stats_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", F.col("value")).otherwise(0.0)
         ).alias("outcome"),
     )
-    # quintile strata via the two-phase bucketed rank
-    # (operators/ranking.py): the per-user frame grows with the data,
-    # so no ntile global window; exact_ntile reproduces ANSI ntile.
+    # quintile strata via the range-sort rank (operators/ranking.py):
+    # the per-user frame grows with the data, so no ntile global
+    # window; exact_ntile reproduces ANSI ntile.
     g = with_global_order(
         per_user, "n_events", tiebreakers=("user_id",), rn="__rn",
         total_count="__n",

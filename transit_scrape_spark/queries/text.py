@@ -1683,9 +1683,9 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("first_doc") == F.col("doc_id"), F.col("c")).otherwise(0)
         ).alias("n_novel"),
     )
-    # corpus deciles via the two-phase bucketed rank
-    # (operators/ranking.py): the per-doc frame grows with the corpus,
-    # so no ntile global window; exact_ntile reproduces ANSI ntile.
+    # corpus deciles via the range-sort rank (operators/ranking.py):
+    # the per-doc frame grows with the corpus, so no ntile global
+    # window; exact_ntile reproduces ANSI ntile.
     from transit_scrape_spark.operators.ranking import (
         exact_ntile,
         with_global_order,
@@ -1855,10 +1855,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
     ).filter(F.col("w") != "")
-    # corpus deciles via the two-phase bucketed rank
-    # (operators/ranking.py): the per-doc frame grows with the corpus,
-    # so no ntile global window. Per-doc token counts come from a
-    # per-ROW size(filter(split(...))) expression aggregated by doc_id —
+    # corpus deciles via the range-sort rank (operators/ranking.py):
+    # the per-doc frame grows with the corpus, so no ntile global
+    # window. Per-doc token counts come from a per-ROW
+    # size(filter(split(...))) expression aggregated by doc_id —
     # NOT from a second pass over the exploded token stream: counting
     # doesn't need the rows, and the map-side expression shuffles one
     # partial count per source row instead of one row per token (r11).
@@ -1875,18 +1875,15 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(n_tok_row).cast("double").alias("n_tok"))
         .filter(F.col("n_tok") > 0)
     )
-    # persist the per-doc decile frame: new_types and per_dec both
-    # reference it, and uncached each re-runs the token explode + the
-    # two-phase rank (26 fact scans in the executed plan). One row per
-    # doc — far smaller than the exploded tokens; release_caches()
-    # cleans up.
+    # new_types and per_dec both read doc_order, a projection over the
+    # rank helper's persisted sort: the per-doc counts run once.
     doc_order = with_global_order(
         per_doc_tok, "doc_id", rn="__rn", total_count="__n"
     ).select(
         "doc_id",
         exact_ntile(F.col("__rn"), F.col("__n"), 10).alias("decile"),
         "n_tok",
-    ).persist()
+    )
     first_use = tok.groupBy("w").agg(F.min("doc_id").alias("fd"))
     new_types = (
         first_use.join(
@@ -1905,7 +1902,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("v_new"), F.lit(0.0)).alias("v_new"),
         )
     )
-    # cumulative curve via the same window-free two-phase shape (the
+    # cumulative curve via the same window-free range-sort rank (the
     # frame is only 10 decile rows, but keeping the op free of ANY
     # empty-partition window lets the plan audit hold a hard rule)
     curve = with_global_order(
