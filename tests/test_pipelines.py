@@ -109,6 +109,58 @@ def test_process_pipeline(spark, geojson_dir, tmp_path):
     assert lon2 > lon
 
 
+def test_process_geojson_sink_null_geometry(spark, tmp_path):
+    """Each GeoJSON-lines row is a valid Feature: a feature without
+    coordinates is written with ``"geometry": null`` (RFC 7946 §3.2), not
+    as a LineString with no ``coordinates``."""
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    src = tmp_path / "in.geojson"
+    src.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        dict(_feature("nullgeom", COORDS), geometry=None), _feature("R1", COORDS),
+    ]}))
+    out = tmp_path / "out"
+    run(spark, str(src), str(out), "geojson")
+
+    feats = {}
+    for part in out.glob("part-*"):
+        for line in part.read_text().splitlines():
+            f = json.loads(line)
+            feats[f["properties"]["route_id"]] = f
+    assert set(feats) == {"nullgeom", "R1"}
+    assert "geometry" in feats["nullgeom"] and feats["nullgeom"]["geometry"] is None
+    geom = feats["R1"]["geometry"]
+    assert geom["type"] == "LineString" and len(geom["coordinates"]) == 3
+
+
+def test_process_csv_sink(spark, geojson_dir, tmp_path):
+    """CSV sink: a header row, WGS84 WKT in ``geometry_wkt`` and no raw
+    ``coordinates`` column."""
+    import csv
+
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    out = tmp_path / "out"
+    run(spark, str(geojson_dir / "fc.geojson"), str(out), "csv")
+
+    rows = []
+    for part in out.glob("part-*.csv"):
+        with open(part, newline="") as fh:
+            lines = list(csv.reader(fh))
+        if lines:
+            header, *body = lines
+            assert "route_id" in header and "geometry_wkt" in header
+            assert "coordinates" not in header
+            rows += [dict(zip(header, r)) for r in body]
+    assert {r["route_id"] for r in rows} == {"R1", "R2"}
+    for r in rows:
+        assert float(r["route_length_m"]) == pytest.approx(2000.0)
+        wkt = r["geometry_wkt"]
+        assert wkt.startswith("LINESTRING (")
+        lon, lat = map(float, wkt[len("LINESTRING ("):].split(",")[0].split())
+        assert -3.4 < lon < -3.0 and 55.8 < lat < 56.0
+
+
 @pytest.mark.parametrize("with_single", [False, True], ids=["alone", "next-to-single"])
 def test_process_empty_collection(spark, tmp_path, with_single):
     """An empty FeatureCollection is zero features, also when the scan

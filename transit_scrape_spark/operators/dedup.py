@@ -50,27 +50,6 @@ def sql_string_hash(s: str) -> str:
     return f"CAST(('0x' || substring(md5({s}), 1, 12)) AS BIGINT) % {P}"
 
 
-def shingles(tokens: Column, k: int = 3) -> Column:
-    """k-token shingles: ['a','b','c','d'] -> ['a b c', 'b c d'].
-
-    Guarded for docs shorter than k tokens (and NULL token arrays):
-    sequence(1, 0) yields a DESCENDING [1, 0] in Spark, so the unguarded
-    form crashes element_at on any short document — invisible on
-    long-doc fixtures, guaranteed at corpus scale.
-    """
-    n = F.size(tokens)
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    body = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            TOKEN_SPLIT, *[F.element_at(tokens, i + j) for j in range(k)]
-        ),
-    )
-    return F.when(n >= k, body).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 SHINGLE_MULT = 1000003
 
 
@@ -99,46 +78,6 @@ def shingle_hashes_from_tokens(th: Column, k: int = 3) -> Column:
     return acc
 
 
-def shingle_hashes(text: Column, k: int = 3) -> Column:
-    """Distinct shingle hash set for a document.
-
-    PERF: prefer materializing ``token_hashes(text)`` as its OWN
-    projected column and calling ``shingle_hashes_from_tokens`` on the
-    column reference. Inlined like this, the md5 token-hash transform is
-    a subtree repeated once per slice reference inside
-    shingle_hashes_from_tokens (k slices + size = k+1 evaluations of
-    the full per-token md5 pass; measured 6x slower at k=8). Kept for
-    API completeness and small-k/test use."""
-    return F.array_distinct(shingle_hashes_from_tokens(token_hashes(text), k))
-
-
-def _perm_hash(a: int, b: int):
-    # factory (not default-arg closure): PySpark derives lambda arity
-    # from the Python signature, so extra bound params would break it
-    return lambda h: (h * a + b) % P
-
-
-def minhash_signature(hashes: Column, num_perm: int = 12) -> Column:
-    """MinHash signature: per permutation k, min((a_k*h + b_k) % P)."""
-    parts = []
-    for kk in range(num_perm):
-        a, b = hash_params(kk)
-        parts.append(F.array_min(F.transform(hashes, _perm_hash(a, b))))
-    return F.array(*parts)
-
-
-def band_hashes(sig: Column, bands: int, rows: int) -> Column:
-    """LSH banding: signature -> `bands` band keys, each folding `rows`
-    consecutive signature values into one bucket hash."""
-    out = []
-    for b in range(bands):
-        h = F.lit(0).cast("long")
-        for r in range(rows):
-            h = (h * 1000003 + F.element_at(sig, b * rows + r + 1)) % P
-        out.append(h)
-    return F.array(*out)
-
-
 def jaccard(sa: Column, sb: Column) -> Column:
     """Exact Jaccard over two distinct-element arrays."""
     return F.size(F.array_intersect(sa, sb)).cast("double") / F.size(
@@ -146,55 +85,38 @@ def jaccard(sa: Column, sb: Column) -> Column:
     )
 
 
-def simhash(token_hashes: Column, bits: int = 16) -> Column:
-    """SimHash: per bit j, sum +-1 over token hashes' bit j; set bit j of
-    the output when the sum is positive."""
-    def _bit_vote(pw: int):
-        return lambda acc, h: acc + ((h / pw).cast("long") % 2) * 2 - 1
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        pw = 1 << j
-        bit_sum = F.aggregate(
-            token_hashes, F.lit(0).cast("long"), _bit_vote(pw)
-        )
-        out = out + F.when(bit_sum > 0, F.lit(pw)).otherwise(F.lit(0))
-    return out
-
-
 # --- codegen (explode/window/groupBy) formulation -------------------------
 #
 # Spark evaluates HOF lambdas interpreted; for the hash-heavy dedup
 # pipeline the row-relational formulation below stays inside whole-stage
 # codegen end to end and is several times faster at scale. Values are
-# IDENTICAL to the array formulation (same fold constants), so the same
-# SQL oracles hold.
+# IDENTICAL to the ``sql_*`` mirrors at the end of this module (same fold
+# constants), so the DuckDB oracles hold.
 
-def shingle_hash_rows(corpus, id_col: str = "doc_id", text_col: str = "text",
-                      k: int = 3):
-    """corpus[id, text] -> distinct rows (id, sh): one row per distinct
-    k-shingle hash. explode -> per-token md5 hash (codegen) -> window
-    lead() to fold the k-gram -> distinct. One shuffle on id (the window
-    sort); the groupBys layered on top reuse that partitioning.
+def shingle_hash_rows(corpus):
+    """corpus[doc_id, text] -> distinct rows (doc_id, sh): one row per
+    distinct 3-token shingle hash. explode -> per-token md5 hash (codegen)
+    -> window lead() to fold the 3-gram -> distinct. One shuffle on
+    doc_id (the window sort); the groupBys layered on top reuse that
+    partitioning.
 
-    ``id_col`` must identify the document: duplicate rows (re-crawled
+    ``doc_id`` must identify the document: duplicate rows (re-crawled
     copies) are collapsed to one before the window, because the
     per-token lead() fold interleaves tied positions from multiple
     copies into phantom shingles otherwise (caught by the
     duplicate-hostile parity sweep)."""
     from pyspark.sql.window import Window
 
-    corpus = corpus.dropDuplicates([id_col])
+    corpus = corpus.dropDuplicates(["doc_id"])
     tok = corpus.select(
-        id_col, F.posexplode(F.split(text_col, TOKEN_SPLIT)).alias("_i", "_t")
-    ).select(id_col, "_i", string_hash(F.col("_t")).alias("_h"))
-    w = Window.partitionBy(id_col).orderBy("_i")
-    h = F.col("_h")
-    folded = h
-    for j in range(1, k):
+        "doc_id", F.posexplode(F.split("text", TOKEN_SPLIT)).alias("_i", "_t")
+    ).select("doc_id", "_i", string_hash(F.col("_t")).alias("_h"))
+    w = Window.partitionBy("doc_id").orderBy("_i")
+    folded = F.col("_h")
+    for j in (1, 2):
         folded = (folded * SHINGLE_MULT + F.lead("_h", j).over(w)) % P
     return (
-        tok.select(id_col, folded.alias("sh"))
+        tok.select("doc_id", folded.alias("sh"))
         .filter(F.col("sh").isNotNull())
         .distinct()
     )

@@ -76,7 +76,6 @@ def load(
     input_glob: str,
     target_dir: str,
     drop_existing: bool = False,
-    dedup_key: str = "route_id",
 ) -> int:
     """One declared scan over every input file -> align -> dedupe ->
     idempotent append, in one write. Returns the number of rows appended,
@@ -89,7 +88,7 @@ def load(
     with a null ``geometry_wkt``. An input keyed ``route_type`` is not a
     shape this repo or the reference writes; its value is not read.
 
-    Dedupe policy: the batch keeps exactly one row per ``dedup_key`` —
+    Dedupe policy: the batch keeps exactly one row per ``route_id`` —
     the smallest by the remaining columns in table order, so the choice
     does not depend on file order or partitioning (null keys form one
     group) — then drops keys the table already holds. A batch with no
@@ -99,17 +98,17 @@ def load(
     aligned = align_to_target(
         feats.withColumn("geometry_wkt", linestring_to_wkt(F.col("coordinates")))
     )
-    rest = [c for c in aligned.columns if c != dedup_key]
-    batch = aligned.groupBy(dedup_key).agg(F.min(F.struct(*rest)).alias("_row"))
-    batch = batch.select(dedup_key, "_row.*").select(*aligned.columns)
+    rest = [c for c in aligned.columns if c != "route_id"]
+    batch = aligned.groupBy("route_id").agg(F.min(F.struct(*rest)).alias("_row"))
+    batch = batch.select("route_id", "_row.*").select(*aligned.columns)
 
     if drop_existing:
         shutil.rmtree(target_dir, ignore_errors=True)
     if os.path.isdir(target_dir) and any(
         f.endswith(".parquet") for f in os.listdir(target_dir)
     ):
-        existing_keys = spark.read.parquet(target_dir).select(dedup_key).distinct()
-        batch = batch.join(existing_keys, dedup_key, "left_anti")
+        existing_keys = spark.read.parquet(target_dir).select("route_id").distinct()
+        batch = batch.join(existing_keys, "route_id", "left_anti")
 
     appended = Observation()
     batch = batch.observe(appended, F.count(F.lit(1)).alias("n"))

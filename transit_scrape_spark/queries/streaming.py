@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transit_scrape_spark.queries.registry import query
-from transit_scrape_spark.sources.tables import load_table
+from transit_scrape_spark.session import cache_width
+from transit_scrape_spark.sources.tables import (
+    load_events_raw,
+    load_table,
+    normalize_event_ts,
+)
 
 
 @contextmanager
@@ -35,24 +40,14 @@ def _state_partitions_sized_to_cluster(spark: SparkSession):
     dominates: measured stream-stream join at sf0.1 on local[32] runs
     13.8s with 32 state partitions, 4.8s with 16, 3.1s with 8 — and a
     vanilla 200-partition session was ~10x worse still. So size state
-    partitions down when state volume is small: max(8, parallelism/4)
-    by default, overridable via TSS_STREAM_STATE_PARTITIONS for
-    deployments whose per-key state actually needs the fan-out (state
-    partitions should grow with state bytes, not with the session's
-    batch-shuffle setting). Restored afterward so batch ops keep the
-    session's setting.
+    partitions down when state volume is small, to the session's
+    summary width ``cache_width`` (max(8, parallelism/4)), which grows
+    with the cluster and not with the session's batch-shuffle setting.
+    Restored afterward so batch ops keep the session's setting.
     """
-    import os
-
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    target = int(
-        os.environ.get(
-            "TSS_STREAM_STATE_PARTITIONS",
-            max(8, spark.sparkContext.defaultParallelism // 4),
-        )
-    )
-    spark.conf.set(key, str(min(int(old), target)))
+    spark.conf.set(key, str(min(int(old), cache_width(spark))))
     try:
         yield
     finally:
@@ -106,22 +101,14 @@ def _run_stream_to_memory(sdf, out_mode: str) -> str:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str):
-    from transit_scrape_spark.sources.tables import load_events_raw
-
     raw = load_events_raw(spark, sf_dir)
     # file streams require a directory source: stream the fixture dir with
     # a glob filter selecting just the events table
-    sdf = (
+    return normalize_event_ts(
         spark.readStream.schema(raw.schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
 
 
 @query(
@@ -585,7 +572,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from transit_scrape_spark.sources.fixtures import fixture_dir
-    from transit_scrape_spark.sources.tables import load_events_raw
 
     def build(d: str) -> None:
         src = os.path.join(sf_dir, "events.parquet")
@@ -594,12 +580,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = fixture_dir("tss_dedup_wm", sf_dir, build)
     raw = load_events_raw(spark, sf_dir)
-    sdf = spark.readStream.schema(raw.schema).parquet(stage)
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        sdf = sdf.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    sdf = normalize_event_ts(spark.readStream.schema(raw.schema).parquet(stage))
     total = sdf.sparkSession.read.parquet(stage).count()
     dedup = sdf.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]

@@ -1658,8 +1658,8 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the working relation, first-occurrence is a window min over tg —
     # no second trigram pass, no self-join.
     # guard short/NULL docs: sequence(0, -1) is a DESCENDING [0, -1] in
-    # Spark, which would hash NULL tokens into phantom trigrams (the
-    # shingles() bug class, caught by the null-hostility sweep)
+    # Spark, which would hash NULL tokens into phantom trigrams (caught
+    # by the null-hostility sweep)
     tri_hashes = F.when(
         F.size(ws) >= 3,
         F.transform(

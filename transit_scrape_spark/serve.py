@@ -33,26 +33,24 @@ ROUTE_COLORS = {
 DEFAULT_COLOR = "#3388ff"
 
 
-def get_local_authorities(routes: DataFrame, column: str = "local_authority") -> DataFrame:
+def get_local_authorities(routes: DataFrame) -> DataFrame:
     """Sidebar values: DISTINCT non-null, sorted (app/app.py:46-56).
 
     The distinct values are a handful of names, so they are sorted in one
     partition after the parallel aggregate; a global ``orderBy`` would
     add a range-partitioner sampling job and a second exchange."""
     return (
-        routes.select(column)
-        .filter(F.col(column).isNotNull())
+        routes.select("local_authority")
+        .filter(F.col("local_authority").isNotNull())
         .distinct()
         .coalesce(1)
-        .sortWithinPartitions(column)
+        .sortWithinPartitions("local_authority")
     )
 
 
 def load_cycling_routes(
     routes: DataFrame,
     authority: str | None = None,
-    authority_column: str = "local_authority",
-    id_column: str = "route_id",
     limit: int = 1000,
 ) -> DataFrame:
     """Main query: pruned projection + optional equality filter + top-k
@@ -61,22 +59,18 @@ def load_cycling_routes(
     injection surface; Catalyst pushes it to the scan.
 
     The top-k runs when this function is called, not when the result is
-    used: the page (at most ``limit`` rows, ordered by ``id_column``)
+    used: the page (at most ``limit`` rows, ordered by ``route_id``)
     comes back as a DataFrame over a local relation on the driver, so
     the caller's collect, map rows and centre reuse it instead of each
     re-running the scan and the sort."""
     out = routes
     if authority is not None:
-        out = out.filter(F.col(authority_column) == F.lit(authority))
-    page = out.orderBy(id_column).limit(limit)
+        out = out.filter(F.col("local_authority") == F.lit(authority))
+    page = out.orderBy("route_id").limit(limit)
     return routes.sparkSession.createDataFrame(page.toArrow(), schema=page.schema)
 
 
-def prepare_map_rows(
-    routes: DataFrame,
-    coords_col: str = "coordinates",
-    route_type_col: str = "route_type",
-) -> DataFrame:
+def prepare_map_rows(routes: DataFrame) -> DataFrame:
     """Per-row map payload (app/app.py:89-150 loop, vectorized): color
     lookup with default, HTML popup with N/A fallbacks, (lat,lon)
     vertex order for the renderer, plus the dataset envelope columns."""
@@ -87,16 +81,16 @@ def prepare_map_rows(
     )
     popup = F.concat(
         F.lit("<b>Type:</b> "),
-        F.coalesce(F.col(route_type_col), F.lit("N/A")),
+        F.coalesce(F.col("route_type"), F.lit("N/A")),
     )
     return routes.select(
         "*",
-        F.coalesce(color_map[F.col(route_type_col)], F.lit(DEFAULT_COLOR)).alias(
+        F.coalesce(color_map[F.col("route_type")], F.lit(DEFAULT_COLOR)).alias(
             "color"
         ),
         popup.alias("popup"),
-        swap_coords(F.col(coords_col)).alias("latlon"),
-        bounding_box(F.col(coords_col)).alias("envelope"),
+        swap_coords(F.col("coordinates")).alias("latlon"),
+        bounding_box(F.col("coordinates")).alias("envelope"),
     )
 
 

@@ -69,7 +69,7 @@ def get_spark(
     return spark
 
 
-def cache_width(spark: SparkSession, divisor: int = 4, floor: int = 8) -> int:
+def cache_width(spark: SparkSession) -> int:
     """Partition count for a persisted summary-level relation.
 
     An InMemoryRelation keeps the static shuffle-partition count
@@ -82,16 +82,17 @@ def cache_width(spark: SparkSession, divisor: int = 4, floor: int = 8) -> int:
     (r11 measured ~15 persists flipping from regression to win once
     their cache width was allowed to shrink).
 
-    max(floor, defaultParallelism // divisor) scales with the cluster —
-    on local[32] it is 8; on a 2 000-core cluster, 500 — so it is a
-    width POLICY, not a local[32] constant. Use it for relations that
-    scale with the data but are summary-sized (per-user/per-item
-    rollups). Relations bounded by calendar/vocabulary (<= ~10k rows at
-    ANY scale) can use an explicit coalesce(1) instead; relations whose
-    consumers are compute-bound (e.g. a self-join fan-out) should keep
-    the full session width.
+    max(8, defaultParallelism // 4) scales with the cluster — on
+    local[32] it is 8; on a 2 000-core cluster, 500 — so it is a width
+    POLICY, not a local[32] constant. Use it for relations that scale
+    with the data but are summary-sized (per-user/per-item rollups).
+    Relations bounded by calendar/vocabulary (<= ~10k rows at ANY scale)
+    can use an explicit coalesce(1) instead; relations whose consumers
+    are compute-bound (e.g. a self-join fan-out) should keep the full
+    session width. Streaming queries size their state-store partitions
+    with it too (``queries.streaming._state_partitions_sized_to_cluster``).
     """
-    return max(floor, spark.sparkContext.defaultParallelism // divisor)
+    return max(8, spark.sparkContext.defaultParallelism // 4)
 
 
 def release_caches(spark: SparkSession) -> int:

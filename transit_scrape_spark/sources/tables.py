@@ -63,20 +63,24 @@ def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with ts normalized to TimestampType regardless of the
-    fixture's physical type — TIMESTAMP(NANOS) reads as long under the
-    legacy flag (truncate to micros), TIMESTAMP(MICROS, not-UTC-adjusted)
-    reads as TIMESTAMP_NTZ (cast to LTZ; with the UTC session timezone
-    pinned in registry._pin_session_confs the wall-clock values are
-    identical to DuckDB's naive read of the same file)."""
-    df = load_events_raw(spark, sf_dir)
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """events ``ts`` as TimestampType regardless of the fixture's physical
+    type, for a batch or a streaming frame read with the events schema —
+    TIMESTAMP(NANOS) reads as long under the legacy flag (truncate to
+    micros), TIMESTAMP(MICROS, not-UTC-adjusted) reads as TIMESTAMP_NTZ
+    (cast to LTZ; with the UTC session timezone pinned in
+    registry._pin_session_confs the wall-clock values are identical to
+    DuckDB's naive read of the same file)."""
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return normalize_event_ts(load_events_raw(spark, sf_dir))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
