@@ -73,6 +73,18 @@ def test_scan_bare_list(spark, geojson_dir):
     assert df.count() == 1
 
 
+def test_glob_metadata_probe_logs_no_warning(spark):
+    """A glob read makes Spark's file-stream-sink metadata probe look for
+    the glob as a literal directory and log the miss as a WARN with a
+    stack trace; the session sets that logger to ERROR."""
+    from transit_scrape_spark.session import FILE_STREAM_SINK_LOGGER
+
+    jvm = spark.sparkContext._jvm
+    jvm.java.lang.Class.forName(FILE_STREAM_SINK_LOGGER)  # the logger's class exists
+    logger = jvm.org.apache.logging.log4j.LogManager.getLogger(FILE_STREAM_SINK_LOGGER)
+    assert logger.getLevel().toString() == "ERROR"
+
+
 def test_scan_mixed_shapes_infers_one_schema(spark, tmp_path):
     """Inferred scan over a FeatureCollection and a single Feature: a
     property that is 1.5 in one and 2 in the other widens to DOUBLE, and a
@@ -131,6 +143,28 @@ def test_process_geojson_sink_null_geometry(spark, tmp_path):
     assert "geometry" in feats["nullgeom"] and feats["nullgeom"]["geometry"] is None
     geom = feats["R1"]["geometry"]
     assert geom["type"] == "LineString" and len(geom["coordinates"]) == 3
+
+
+def test_process_geojson_sink_null_vertex(spark, tmp_path):
+    """A route with a null vertex is written with ``"geometry": null``
+    (positions are numbers, RFC 7946 §3.1.1) and keeps its properties,
+    its null ``route_length_m`` written as a ``null`` member."""
+    from transit_scrape_spark.pipelines.process_routes import run
+
+    src = tmp_path / "in.geojson"
+    src.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        _feature("nullvert", [COORDS[0], None, COORDS[2]]),
+    ]}))
+    out = tmp_path / "out"
+    run(spark, str(src), str(out), "geojson")
+
+    lines = [ln for part in out.glob("part-*") for ln in part.read_text().splitlines()]
+    assert len(lines) == 1
+    f = json.loads(lines[0])
+    assert "geometry" in f and f["geometry"] is None
+    props = f["properties"]
+    assert "route_length_m" in props and props["route_length_m"] is None
+    assert {k: props[k] for k in ROUTE_PROPS} == dict(ROUTE_PROPS, route_id="nullvert")
 
 
 def test_process_csv_sink(spark, geojson_dir, tmp_path):

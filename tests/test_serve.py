@@ -4,6 +4,7 @@ processed routes frame."""
 from __future__ import annotations
 
 import json
+import os
 import uuid
 
 import pytest
@@ -188,3 +189,99 @@ def test_map_center_none_without_envelope(route_table, authority):
 
     page = load_cycling_routes(route_table, authority)
     assert map_center(_map_rows(page)) is None
+
+
+# -- three jobs per interaction; the centre from rows already held ----------
+
+
+def test_interaction_runs_at_most_three_jobs(spark, route_table):
+    """Schema read, authority list and page: one job each. The map rows
+    and the centre reuse the page on the driver."""
+    from transit_scrape_spark.serve import (
+        get_local_authorities,
+        load_cycling_routes,
+        map_center,
+    )
+
+    path = os.path.dirname(route_table.inputFiles()[0])
+    seen = {}
+
+    def interaction():
+        routes = spark.read.parquet(path)
+        seen["auths"] = [r[0] for r in get_local_authorities(routes).collect()]
+        rows_df = _map_rows(load_cycling_routes(routes, "Edinburgh"))
+        seen["ids"] = [r["route_id"] for r in rows_df.collect()]
+        seen["center"] = map_center(rows_df)
+
+    assert _jobs_run(spark, interaction) <= 3
+    assert seen == {
+        "auths": ["Edinburgh", "Fife", "Glasgow"],
+        "ids": ["E01", "E03", "E07", "E09"],
+        "center": (3.0, 3.5),
+    }
+
+
+def test_map_center_runs_no_job(spark, route_table):
+    from transit_scrape_spark.serve import load_cycling_routes, map_center
+
+    rows_df = _map_rows(load_cycling_routes(route_table, None))
+    out = []
+    assert _jobs_run(spark, lambda: out.append(map_center(rows_df))) == 0
+    assert out == [(25.5, 25.5)]
+
+
+def _same(a, b):
+    """Equal, counting NaN equal to NaN."""
+    return a == b or (a != a and b != b)
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        [("X1", [[float("nan"), 3.0], [-4.0, 30.0]])],
+        [("X2", [[-7.0, -2.0], [None, None]])],
+        [
+            ("X1", [[float("nan"), 3.0], [-4.0, 30.0]]),
+            ("X2", [[-7.0, -2.0], [None, None]]),
+            ("X3", [[float("nan"), float("nan")]]),
+        ],
+    ],
+    ids=["nan-ordinate", "null-vertex", "both"],
+)
+def test_map_center_equals_spark_aggregate(spark, route_table, extra):
+    """The driver-side fold is Spark's min/max: nulls skipped, NaN above
+    every number."""
+    from transit_scrape_spark.functions.geo import wkt_to_linestring
+    from transit_scrape_spark.serve import (
+        load_cycling_routes,
+        map_center,
+        prepare_map_rows,
+    )
+
+    page = load_cycling_routes(route_table, None).select(
+        "route_id",
+        "route_type",
+        wkt_to_linestring(F.col("geometry_wkt")).alias("coordinates"),
+    )
+    odd = spark.createDataFrame(
+        [(rid, "Cycle Path", coords) for rid, coords in extra], page.schema
+    )
+    rows_df = prepare_map_rows(page.unionByName(odd))
+    agg = rows_df.agg(
+        F.min("envelope.minx"),
+        F.min("envelope.miny"),
+        F.max("envelope.maxx"),
+        F.max("envelope.maxy"),
+    ).collect()[0]
+    want = ((agg[0] + agg[2]) / 2.0, (agg[1] + agg[3]) / 2.0)
+    got = map_center(rows_df)
+    assert _same(got[0], want[0]) and _same(got[1], want[1]), (got, want)
+
+
+def test_authorities_plan_has_no_exchange(spark, route_table):
+    from transit_scrape_spark.serve import get_local_authorities
+
+    df = get_local_authorities(route_table)
+    assert _jobs_run(spark, df.collect) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan

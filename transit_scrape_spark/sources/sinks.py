@@ -27,23 +27,34 @@ def write_geojson(df: DataFrame, out_dir: str) -> None:
     GeoJSON — the distributed-friendly variant of the reference's single
     FeatureCollection file, process_cycle_networks.py:149-153).
 
-    A row with null coordinates is written with ``"geometry": null``, the
-    RFC 7946 §3.2 form for an unlocated feature. ``to_json`` drops null
-    members, so the envelope is spelled out here rather than nested in
-    one ``to_json``, which would write a LineString with no
-    ``coordinates``."""
+    Null properties are written as ``null`` members. A row whose
+    coordinates are null, or hold a vertex with fewer than two
+    ordinates or a null or non-finite one (process keeps a null vertex
+    as ``[null, null]``), is written with ``"geometry": null`` and its
+    properties: RFC 7946 §3.1.1 positions are numbers, and §3.2 gives an
+    unlocated feature a null geometry. The envelope is spelled out here
+    rather than nested in one ``to_json``, which would write a
+    LineString with no ``coordinates``."""
     props = [c for c in df.columns if c != "coordinates"]
+    coords = F.col("coordinates")
+    bad_vertex = F.exists(
+        coords,
+        lambda p: p.isNull()
+        | (F.size(p) < 2)
+        | F.exists(
+            p, lambda v: v.isNull() | F.isnan(v) | (F.abs(v) == float("inf"))
+        ),
+    )
     geometry = F.to_json(
-        F.struct(
-            F.lit("LineString").alias("type"),
-            F.col("coordinates").alias("coordinates"),
-        )
+        F.struct(F.lit("LineString").alias("type"), coords.alias("coordinates"))
     )
     feature = F.concat(
         F.lit('{"type":"Feature","properties":'),
-        F.to_json(F.struct(*[F.col(c) for c in props])),
+        F.to_json(
+            F.struct(*[F.col(c) for c in props]), {"ignoreNullFields": "false"}
+        ),
         F.lit(',"geometry":'),
-        F.when(F.col("coordinates").isNotNull(), geometry).otherwise(F.lit("null")),
+        F.when(coords.isNull() | bad_vertex, F.lit("null")).otherwise(geometry),
         F.lit("}"),
     )
     df.select(feature.alias("value")).write.mode("overwrite").text(out_dir)
