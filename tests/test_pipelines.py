@@ -326,7 +326,7 @@ def test_load_idempotent(spark, geojson_dir, tmp_path):
     assert "route_type" in loaded.columns and "type" not in loaded.columns
     assert loaded.filter("created_at IS NULL").count() == 0
 
-    # re-run: anti-join dedup -> nothing appended (reference drop_existing hazard)
+    # re-run: keys already loaded -> nothing appended (reference drop_existing hazard)
     n2 = load(spark, str(geojson_dir / "*.geojson"), target)
     assert n2 == 0
     assert spark.read.parquet(target).count() == 4
@@ -414,8 +414,9 @@ def test_load_hostile_batch(spark, tmp_path, case):
 def test_load_single_execution(spark, geojson_dir, tmp_path):
     """A fresh load and a reload each run one scan and one write, with
     no inference or count() pass (a load with both took 4 jobs fresh and
-    9 on reload on this corpus); a no-op rerun adds at most one (empty)
-    part file and no rows."""
+    9 on reload on this corpus, and a reload with a separate key scan and
+    anti-join 5); a no-op rerun adds at most one (empty) part file and no
+    rows."""
     import os
     import uuid
 
@@ -445,12 +446,40 @@ def test_load_single_execution(spark, geojson_dir, tmp_path):
     n, jobs = jobs_run(str(geojson_dir / "*.geojson"), target)
     assert n == 4 and jobs <= 2  # scan+dedupe exchange, write
     n, jobs = jobs_run(str(batch2 / "*.geojson"), target)
-    assert n == 2 and jobs <= 5  # plus the table's key scan for the anti-join
+    assert n == 2 and jobs <= 2  # the table's keys join the same dedupe exchange
 
     rows, files = _load_rows(spark, target), part_files(target)
     assert jobs_run(str(batch2 / "*.geojson"), target)[0] == 0
     assert _load_rows(spark, target) == rows
     assert len(part_files(target)) <= len(files) + 1
+
+
+def test_load_rerun_keeps_one_null_key_row(spark, tmp_path):
+    """A key the table holds keeps no new row, the NULL key included:
+    three loads of one batch leave one null-key row, not one per load."""
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    path = tmp_path / "batch.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        _feature(None, COORDS), _feature("A", COORDS),
+    ]}))
+    target = str(tmp_path / "table")
+    assert [load(spark, str(path), target) for _ in range(3)] == [2, 0, 0]
+    assert [r["route_id"] for r in _load_rows(spark, target)] == [None, "A"]
+
+
+def test_load_drop_existing_replaces_table(spark, tmp_path):
+    """drop_existing overwrites: the table holds exactly the new batch."""
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    for name, ids in (("ab", ("A", "B")), ("bc", ("B", "C"))):
+        (tmp_path / f"{name}.geojson").write_text(json.dumps(
+            {"type": "FeatureCollection", "features": [_feature(r, COORDS) for r in ids]}
+        ))
+    target = str(tmp_path / "table")
+    assert load(spark, str(tmp_path / "ab.geojson"), target) == 2
+    assert load(spark, str(tmp_path / "bc.geojson"), target, drop_existing=True) == 2
+    assert [r["route_id"] for r in _load_rows(spark, target)] == ["B", "C"]
 
 
 def test_reprojection_golden(spark):

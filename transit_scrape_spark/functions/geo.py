@@ -92,11 +92,6 @@ def to_ewkt(wkt: Column, srid: int = 4326) -> Column:
     return F.concat(F.lit(f"SRID={srid};"), wkt)
 
 
-def from_ewkt(ewkt: Column) -> Column:
-    """EWKT -> bare WKT (drop the SRID=...; prefix)."""
-    return F.regexp_replace(ewkt, r"^SRID=\d+;", "")
-
-
 # --- coordinate manipulation ---------------------------------------------
 
 def swap_coords(coords: Column) -> Column:

@@ -6,9 +6,10 @@
 - per-row ORM materialization + 64k-batch commits (:148-182) become one
   schema-aligned parquet append, whose row count is observed on the write
   itself (no separate ``count()`` pass);
-- ``--drop-existing`` / re-run hazard (:29-30,91-92) becomes an in-batch
-  dedupe plus an idempotent anti-join against already-loaded keys
-  (SURVEY §7 M3).
+- ``--drop-existing`` / re-run hazard (:29-30,91-92) becomes one
+  aggregate over the batch and the table's keys that keeps a row only for
+  a key the table does not hold yet, the NULL key included (SURVEY §7 M3);
+  ``--drop-existing`` is an overwrite write.
 
 Input contract: one GeoJSON document per file (FeatureCollection, bare
 feature list or single Feature), with ``type`` as the source key of
@@ -19,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -77,9 +77,9 @@ def load(
     target_dir: str,
     drop_existing: bool = False,
 ) -> int:
-    """One declared scan over every input file -> align -> dedupe ->
-    idempotent append, in one write. Returns the number of rows appended,
-    as observed on that write.
+    """One declared scan over every input file -> align -> one dedupe
+    aggregate -> idempotent append, in one write. Returns the number of
+    rows appended, as observed on that write.
 
     Every property is scanned as STRING and typed only by
     :func:`align_to_target`'s casts, so ``"13"`` loads as 13.0 and a
@@ -88,31 +88,34 @@ def load(
     with a null ``geometry_wkt``. An input keyed ``route_type`` is not a
     shape this repo or the reference writes; its value is not read.
 
-    Dedupe policy: the batch keeps exactly one row per ``route_id`` —
-    the smallest by the remaining columns in table order, so the choice
-    does not depend on file order or partitioning (null keys form one
-    group) — then drops keys the table already holds. A batch with no
-    new key still appends one empty, schema-only part file.
+    Dedupe policy: the table's keys (read with a declared schema) and the
+    batch meet in one ``groupBy(route_id)``. A key the table already holds
+    keeps no new row; any other key keeps exactly one, the smallest by the
+    remaining columns in table order, so the choice does not depend on
+    file order or partitioning. NULL keys form one group, so the table
+    holds at most one null-key row, however many batches carry one. A
+    batch with no new key still appends one empty, schema-only part file.
+    ``drop_existing`` overwrites the table with the deduplicated batch and
+    does not read it.
     """
     feats = read_geojson_features(spark, input_glob, properties=_PROPERTIES)
     aligned = align_to_target(
         feats.withColumn("geometry_wkt", linestring_to_wkt(F.col("coordinates")))
     )
+    rows = aligned.withColumn("_new", F.lit(True))
+    if not drop_existing and os.path.isdir(target_dir):
+        loaded = spark.read.schema("route_id STRING").parquet(target_dir)
+        rows = rows.unionByName(
+            loaded.withColumn("_new", F.lit(False)), allowMissingColumns=True
+        )
+    # a loaded key sorts first (false < true), so its group keeps no new row
     rest = [c for c in aligned.columns if c != "route_id"]
-    batch = aligned.groupBy("route_id").agg(F.min(F.struct(*rest)).alias("_row"))
-    batch = batch.select("route_id", "_row.*").select(*aligned.columns)
-
-    if drop_existing:
-        shutil.rmtree(target_dir, ignore_errors=True)
-    if os.path.isdir(target_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(target_dir)
-    ):
-        existing_keys = spark.read.parquet(target_dir).select("route_id").distinct()
-        batch = batch.join(existing_keys, "route_id", "left_anti")
+    batch = rows.groupBy("route_id").agg(F.min(F.struct("_new", *rest)).alias("_row"))
+    batch = batch.where("_row._new").select("route_id", *(f"_row.{c}" for c in rest))
 
     appended = Observation()
     batch = batch.observe(appended, F.count(F.lit(1)).alias("n"))
-    batch.write.mode("append").parquet(target_dir)
+    batch.write.mode("overwrite" if drop_existing else "append").parquet(target_dir)
     return appended.get["n"]
 
 

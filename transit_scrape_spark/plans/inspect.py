@@ -25,18 +25,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def assert_in_plan(df: DataFrame, *fragments: str) -> None:
-    plan = executed_plan(df)
-    for f in fragments:
-        assert f in plan, f"expected {f!r} in plan:\n{plan[:4000]}"
-
-
-def assert_not_in_plan(df: DataFrame, *fragments: str) -> None:
-    plan = executed_plan(df)
-    for f in fragments:
-        assert f not in plan, f"unexpected {f!r} in plan:\n{plan[:4000]}"
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters clauses from every scan in the plan."""
     out = []

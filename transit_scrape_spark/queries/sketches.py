@@ -105,10 +105,6 @@ def agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_bit(col, k: int):
-    return string_hash(F.concat(col.cast("string"), F.lit(f":bloom{k}"))) % _BLOOM_W
-
-
 def _sql_bloom_bit(expr: str, k: str) -> str:
     keyed = f"CAST({expr} AS VARCHAR) || ':bloom' || CAST({k} AS VARCHAR)"
     return f"({sql_string_hash(keyed)}) % {_BLOOM_W}"

@@ -85,9 +85,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all fixture tables as temp views for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -11,8 +11,6 @@ pipeline is the fully-tested GeoJSON scanner.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 
 def build_getfeature_url(
     base_url: str, type_name: str, srs: str = "EPSG:27700", fmt: str = "application/json"
@@ -114,11 +112,3 @@ def fetch_wfs_to_geojson(
         f"WFS fetch unavailable in this environment ({last_exc}); "
         "stage GeoJSON files and use scan-geojson instead"
     ) from last_exc
-
-
-def read_wfs(spark: SparkSession, url: str, staging_path: str) -> DataFrame:
-    """Fetch + scan in one call (fetch on driver; scan distributed)."""
-    from transit_scrape_spark.sources.geojson import read_geojson_features
-
-    fetch_wfs_to_geojson(url, staging_path)
-    return read_geojson_features(spark, staging_path)
