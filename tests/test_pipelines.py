@@ -468,6 +468,19 @@ def test_load_rerun_keeps_one_null_key_row(spark, tmp_path):
     assert [r["route_id"] for r in _load_rows(spark, target)] == [None, "A"]
 
 
+def test_load_rerun_into_uri_target_appends_nothing(spark, tmp_path):
+    """A target given as a ``file://`` URI is found on reload, as a plain
+    path is: three loads of one batch return 1, 0, 0 and leave one row
+    (an ``os.path`` existence check never saw the table: 1, 1, 1)."""
+    from transit_scrape_spark.pipelines.load_routes import load
+
+    path = tmp_path / "batch.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [_feature("A", COORDS)]}))
+    target = f"file://{tmp_path}/table"
+    assert [load(spark, str(path), target) for _ in range(3)] == [1, 0, 0]
+    assert [r["route_id"] for r in _load_rows(spark, target)] == ["A"]
+
+
 def test_load_drop_existing_replaces_table(spark, tmp_path):
     """drop_existing overwrites: the table holds exactly the new batch."""
     from transit_scrape_spark.pipelines.load_routes import load

@@ -10,8 +10,9 @@ Scale design:
 - shingling/hashing is a projection (no shuffle);
 - LSH banding turns the O(n^2) pair space into groupBy(band_hash)
   buckets — one shuffle keyed on (band_id, band_hash);
-- candidate pairs come from an equi-join on band keys (never a cross
-  join); exact Jaccard verification runs only on candidates.
+- candidate pairs come from within one band bucket (the pairs of each
+  groupBy bucket's members, or an equi-join on band keys), never a cross
+  join; exact Jaccard verification runs only on candidates.
 
 Hash family: polynomial char hash mod P (P = 2^31-1), then K universal
 hashes (a_k*h + b_k) mod P. All intermediates < 2^62, safe in BIGINT.

@@ -19,7 +19,6 @@ feature list or single Feature), with ``type`` as the source key of
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +70,14 @@ def align_to_target(df: DataFrame) -> DataFrame:
     ).withColumn("updated_at", F.current_timestamp())
 
 
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop filesystem the write
+    will use, so ``file://``, ``hdfs://`` and plain local paths agree."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return p.getFileSystem(conf).exists(p)
+
+
 def load(
     spark: SparkSession,
     input_glob: str,
@@ -103,7 +110,7 @@ def load(
         feats.withColumn("geometry_wkt", linestring_to_wkt(F.col("coordinates")))
     )
     rows = aligned.withColumn("_new", F.lit(True))
-    if not drop_existing and os.path.isdir(target_dir):
+    if not drop_existing and _exists(spark, target_dir):
         loaded = spark.read.schema("route_id STRING").parquet(target_dir)
         rows = rows.unionByName(
             loaded.withColumn("_new", F.lit(False)), allowMissingColumns=True

@@ -157,54 +157,48 @@ _NEAR_DUP_PAIRS_SQL = f"""
     "dedup-near-minhash",
     oracle=_NEAR_DUP_PAIRS_SQL,
     doc="Full MinHash+LSH near-dup pipeline: shingle -> signature -> "
-    "band buckets (groupBy shuffle on band key, never a cross join) -> "
-    "candidate pairs via equi-join -> exact Jaccard verify >= 0.5. "
-    "At 100 TB the band join is the only shuffle and its key space is "
-    "uniform by construction; candidates are a tiny fraction of n^2.",
+    "band buckets (one groupBy shuffle on the band key, never a cross "
+    "join or self-join) -> candidate pairs within each bucket -> exact "
+    "Jaccard verify >= 0.5. At 100 TB the bucket aggregate is the only "
+    "shuffle after the signatures and its key space is uniform by "
+    "construction; candidates are a tiny fraction of n^2.",
 )
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode/window/groupBy formulation (codegen end to end); ONE pass
     # computes both the signature columns (-> band keys) and the shingle
-    # set (-> Jaccard verify). Persisted: consumed by both self-join
-    # sides and both verify re-attach joins (AQE defeats ReuseExchange),
-    # and the cache build is cheap — plain longs + one array, no
-    # interpreted lambdas.
+    # set (-> Jaccard verify), and each doc's shingle set travels with it
+    # into its band buckets, so the candidates need no re-attach join
     sh_rows = shingle_hash_rows(_corpus(spark, sf_dir))
-    hashed = (
-        sh_rows.groupBy("doc_id")
-        .agg(*signature_columns(NUM_PERM), F.collect_list("sh").alias("sh"))
-        .persist()
+    hashed = sh_rows.groupBy("doc_id").agg(
+        *signature_columns(NUM_PERM), F.collect_list("sh").alias("sh")
     )
-    banded = (
-        hashed.select("doc_id", *band_hash_columns(BANDS, ROWS))
-        .select(
+    buckets = (
+        hashed.select(
             "doc_id",
-            F.posexplode(
-                F.array(*[F.col(f"_band{b}") for b in range(BANDS)])
-            ).alias("band_id0", "band_hash"),
+            "sh",
+            F.posexplode(F.array(*band_hash_columns(BANDS, ROWS))).alias(
+                "band_id", "band_hash"
+            ),
         )
-        .select("doc_id", (F.col("band_id0") + 1).alias("band_id"), "band_hash")
+        .groupBy("band_id", "band_hash")
+        .agg(F.collect_list(F.struct("doc_id", "sh")).alias("docs"))
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # candidate pairs carry ONLY ids through the shuffle + distinct —
-    # shingle sets re-attach afterwards (cheap: ids are tiny, arrays big)
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    # every ordered pair within a bucket; a pair sharing several bands
+    # is verified in each and kept once
+    pairs = (
+        buckets.select(F.explode("docs").alias("a"), "docs")
+        .select("a", F.explode("docs").alias("b"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+    )
+    jac = jaccard(F.col("a.sh"), F.col("b.sh"))
+    return (
+        pairs.where(jac >= 0.5)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.round(jac, 6).alias("jaccard_sim"),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sh_a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = hashed.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    pairs = cands.join(sh_a, "doc_a").join(sh_b, "doc_b")
-    jac = jaccard(F.col("sh_a"), F.col("sh_b"))
-    return pairs.filter(jac >= 0.5).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard_sim")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 

@@ -801,7 +801,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffling rows that carry multi-KB text bodies costs 100x the "
     "narrow projection, so every select-then-display query should "
     "shuffle ids and re-attach payloads last — the same "
-    "ids-only-through-the-shuffle discipline as dedup-near-minhash's "
+    "ids-only-through-the-shuffle discipline as dedup-lsh-tuning's "
     "candidate join.",
 )
 def join_late_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:

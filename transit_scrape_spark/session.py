@@ -11,6 +11,16 @@ real cluster. Every knob here is scale-motivated:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   any other engine reading the same parquet.
 - Arrow enabled for the few pandas_udf paths (vectorized, not per-row).
+- No per-Column call-site capture (``dataFrameDebugging`` off). With it
+  on, PySpark 4 wraps every Column call in an ``inspect.stack()`` plus
+  about six JVM calls to record the user's file and line. Turning it off
+  cut the py4j round trips of building a plan from 485 to 150 for
+  ``tpch-q3`` and from 2,667 to 839 for the old ``dedup-near-minhash``
+  plan (perfbench seed-7 tables, ``local[4]``). PySpark caches the flag
+  at the first Column built in the process, so it is set here, in the
+  builder, not later. The trade: an
+  ``AnalysisException`` no longer names the Python file and line that
+  built the failing Column; its error class and message are unchanged.
 """
 
 from __future__ import annotations
@@ -39,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -61,7 +72,8 @@ def get_spark(
         # dedup-near-minhash (headline) regressed 1.33 s -> 2.6-3.8 s
         # consistently across three conf-on sweeps — the persisted
         # signature relation collapsed to few partitions and serialized
-        # the band self-join. Default (false) keeps cached plans at the
+        # the band self-join (that op has since dropped both the cache
+        # and the self-join). Default (false) keeps cached plans at the
         # static width.
     )
     for k, v in (extra_conf or {}).items():

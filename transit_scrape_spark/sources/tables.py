@@ -1,15 +1,26 @@
 """Parquet fixture tables (the driver's TPC-H-ish star schema).
 
 Replaces the reference's per-file Python loop + SQLAlchemy session
-(``/root/reference/src/push_to_db.py:77-106``) with single distributed
-scans: one ``spark.read.parquet`` per table; Catalyst handles column
-pruning and predicate pushdown into the parquet reader.
+(``push_to_db.py:77-106``) with single distributed scans: one
+``spark.read.parquet`` per table; Catalyst handles column pruning and
+predicate pushdown into the parquet reader.
+
+Opening a parquet file without a schema runs a Spark job that reads its
+footer. A process that reads the same file again (every pass of a
+benchmark, every op of a registry sweep) reuses the schema the first
+read inferred, so only the first read of a file runs that job; see
+:func:`read_parquet`.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -25,10 +36,44 @@ TABLES = [
 ]
 
 
+# the session confs that change the schema Spark infers from a parquet footer
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with no schema-reading job on a repeat
+    read of the same file.
+
+    The first read infers the schema (one job); every read then passes it
+    through ``spark.read.schema(...)``. The memo key is the file (path,
+    inode, ``st_mtime_ns``, size) and the inference confs, so a rewritten
+    file or a flipped ``nanosAsLong`` infers afresh. A directory or a
+    path ``os.stat`` cannot see (``hdfs://...``) is always inferred."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    schema = _inferred_schema(spark, path, st.st_ino, st.st_mtime_ns, st.st_size, confs)
+    return spark.read.schema(schema).parquet(path)
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred_schema(spark, path, ino, mtime_ns, size, confs) -> StructType:
+    return spark.read.parquet(path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    return _normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _normalize_ntz(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:
@@ -60,7 +105,7 @@ def _ensure_nanos_as_long(spark: SparkSession) -> None:
 
 def load_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_nanos_as_long(spark)
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return read_parquet(spark, f"{sf_dir}/events.parquet")
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
