@@ -123,7 +123,7 @@ _PERSIST_OPS, _UNEXTRACTABLE = _derive_persist_ops()
 # Ops that once persisted and now build their result without a cache stay
 # in the sweep, so a cache brought back by another route (a helper the
 # derivation cannot see) still has to be released.
-_FORMER_PERSIST_OPS = ("dedup-near-minhash",)
+_FORMER_PERSIST_OPS = ("dedup-near-minhash", "dedup-lsh-tuning")
 _SWEEP_OPS = _PERSIST_OPS + [
     op for op in _FORMER_PERSIST_OPS if op not in _PERSIST_OPS
 ]

@@ -1,8 +1,9 @@
 """Fixed driver-side cost per op: what building and starting a query
 costs before any task does useful work. Each test pins one cost that
 was removed: the per-Column call-site capture, the schema-reading job
-on a repeat table read, and the extra jobs of the MinHash near-dup
-plan."""
+on a repeat table read, the extra jobs of the MinHash near-dup and
+LSH-tuning plans, and the recompilation of generated classes that an
+undersized codegen cache evicted."""
 
 from __future__ import annotations
 
@@ -16,7 +17,14 @@ import pytest
 
 from transit_scrape_spark.plans.inspect import executed_plan
 from transit_scrape_spark.queries.registry import registry
+from transit_scrape_spark.session import CODEGEN_CACHE_ENTRIES, release_caches
 from transit_scrape_spark.sources.tables import TABLES, load_table, read_parquet
+
+# the seven ops of perfbench's analytics-mix workload
+MIX_OPS = (
+    "tpch-q3", "sessionize", "dedup-near-minhash", "simsearch-topk",
+    "geo-reproject", "multimodal-cols", "stream-tumbling-agg",
+)
 
 
 def _jobs(spark, fn):
@@ -116,3 +124,45 @@ def test_near_minhash_is_one_bucket_aggregate(spark, sf_dir):
     assert jobs <= 6
     plan = executed_plan(df)
     assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+
+
+def test_lsh_tuning_pairs_in_bucket_aggregates(spark, sf_dir):
+    """Each tuning config pairs documents inside its band buckets: no
+    cached signatures and no band self-join in the plan (the plan with
+    both ran 14 jobs on this fixture; this one runs 13)."""
+    df = registry()["dedup-lsh-tuning"].fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    plan = executed_plan(df)
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert "Join" not in plan
+
+
+def _compilations(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_get_spark_sizes_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_mix_rerun_compiles_no_class(spark, sf_dir):
+    """A second run of the seven mix ops finds every generated class in
+    the codegen cache. With Spark's default of 100 entries the first
+    run's 131 classes were evicted before the rerun reached them, and the
+    rerun compiled 79 classes when this test ran alone, 123 after the
+    LSH-tuning test (this fixture, ``local[8]``, 8 shuffle partitions)."""
+    def run_mix():
+        for op in MIX_OPS:
+            registry()[op].fn(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            release_caches(spark)
+
+    run_mix()
+    before = _compilations(spark)
+    run_mix()
+    assert _compilations(spark) - before == 0

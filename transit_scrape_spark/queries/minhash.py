@@ -153,6 +153,30 @@ _NEAR_DUP_PAIRS_SQL = f"""
 """
 
 
+def _bucket_pairs(hashed: DataFrame, bands: int, rows: int, *carry: str) -> DataFrame:
+    """Every ordered candidate pair ``a``, ``b`` (``a.doc_id < b.doc_id``)
+    that shares a band bucket, from one ``groupBy(band_id, band_hash)``
+    over the ``_m{k}`` signature columns of ``hashed``: each doc, with
+    its ``carry`` columns, is collected into its ``bands`` buckets, so
+    no self-join is needed. A pair appears once per band it shares."""
+    buckets = (
+        hashed.select(
+            "doc_id",
+            *carry,
+            F.posexplode(F.array(*band_hash_columns(bands, rows))).alias(
+                "band_id", "band_hash"
+            ),
+        )
+        .groupBy("band_id", "band_hash")
+        .agg(F.collect_list(F.struct("doc_id", *carry)).alias("docs"))
+    )
+    return (
+        buckets.select(F.explode("docs").alias("a"), "docs")
+        .select("a", F.explode("docs").alias("b"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+    )
+
+
 @query(
     "dedup-near-minhash",
     oracle=_NEAR_DUP_PAIRS_SQL,
@@ -172,24 +196,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = sh_rows.groupBy("doc_id").agg(
         *signature_columns(NUM_PERM), F.collect_list("sh").alias("sh")
     )
-    buckets = (
-        hashed.select(
-            "doc_id",
-            "sh",
-            F.posexplode(F.array(*band_hash_columns(BANDS, ROWS))).alias(
-                "band_id", "band_hash"
-            ),
-        )
-        .groupBy("band_id", "band_hash")
-        .agg(F.collect_list(F.struct("doc_id", "sh")).alias("docs"))
-    )
-    # every ordered pair within a bucket; a pair sharing several bands
-    # is verified in each and kept once
-    pairs = (
-        buckets.select(F.explode("docs").alias("a"), "docs")
-        .select("a", F.explode("docs").alias("b"))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-    )
+    # a pair sharing several bands is verified in each and kept once
+    pairs = _bucket_pairs(hashed, BANDS, ROWS, "sh")
     jac = jaccard(F.col("a.sh"), F.col("b.sh"))
     return (
         pairs.where(jac >= 0.5)
@@ -636,29 +644,13 @@ _TUNING_CONFIGS = [(6, 2), (4, 3)]
 def dedup_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = load_table(spark, sf_dir, "documents").count()
     sh_rows = shingle_hash_rows(_corpus(spark, sf_dir))
-    hashed = (
-        sh_rows.groupBy("doc_id").agg(*signature_columns(NUM_PERM)).persist()
-    )
+    # no cache: the configs' identical signature subtrees share one
+    # shuffle (the plan reuses the exchange)
+    hashed = sh_rows.groupBy("doc_id").agg(*signature_columns(NUM_PERM))
     results = None
     for bands, rows in _TUNING_CONFIGS:
-        banded = (
-            hashed.select("doc_id", *band_hash_columns(bands, rows))
-            .select(
-                "doc_id",
-                F.posexplode(
-                    F.array(*[F.col(f"_band{b}") for b in range(bands)])
-                ).alias("band_id0", "band_hash"),
-            )
-            .select("doc_id", (F.col("band_id0") + 1).alias("band_id"), "band_hash")
-        )
-        a, b = banded.alias("a"), banded.alias("b")
         cands = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
+            _bucket_pairs(hashed, bands, rows)
             .select(
                 F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
             )

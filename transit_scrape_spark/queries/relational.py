@@ -802,7 +802,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "narrow projection, so every select-then-display query should "
     "shuffle ids and re-attach payloads last — the same "
     "ids-only-through-the-shuffle discipline as dedup-lsh-tuning's "
-    "candidate join.",
+    "band buckets.",
 )
 def join_late_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
